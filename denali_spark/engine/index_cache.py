@@ -146,7 +146,8 @@ def widen_build_input(df: DataFrame, rows: int, rows_per_task: int = 256) -> Dat
     only its row-to-file placement moves.
 
     The no-op check reads the SCAN's split count from the live physical
-    plan (`inputFiles` + the session's split-sizing confs), never from
+    plan (`inputFiles`, sized through each path's Hadoop FileSystem, + the
+    session's split-sizing confs), never from
     ``df.rdd`` — converting to an RDD forces full physical planning per
     build and, under AQE, would eagerly materialize shuffle stages if a
     caller ever passed a plan containing an exchange (r16 ADVICE). The
@@ -162,14 +163,16 @@ def widen_build_input(df: DataFrame, rows: int, rows_per_task: int = 256) -> Dat
         files = df.inputFiles()
         max_split = int(spark.conf.get("spark.sql.files.maxPartitionBytes"))
         open_cost = int(spark.conf.get("spark.sql.files.openCostInBytes"))
-        sizes = sorted(
-            (
-                os.stat(f[len("file:"):] if f.startswith("file:") else f).st_size
-                + open_cost
-                for f in files
-            ),
-            reverse=True,
-        )
+        # each path's own Hadoop FileSystem, so s3a:// and hdfs:// inputs
+        # are sized too, not only local files
+        hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
+        hconf = spark._jsc.hadoopConfiguration()
+
+        def size(f: str) -> int:
+            path = hadoop_path(f)
+            return path.getFileSystem(hconf).getFileStatus(path).getLen()
+
+        sizes = sorted((size(f) + open_cost for f in files), reverse=True)
         # FilePartition.getFilePartitions: greedy first-fit in size order.
         bins = 0
         cur = 0

@@ -253,36 +253,6 @@ def _split_top_level(text: str, sep: str) -> list[str]:
     return parts
 
 
-def _mask_literals(text: str) -> tuple[str, list[str]]:
-    """Replace SQL string literals with \\x00<i>\\x00 placeholders so the
-    textual name/qualification rewrites can never touch one (a literal
-    containing "ns.table" must stay a literal). Literals that FOLLOW
-    `AS OF` stay live — they are operands of the time-travel syntax the
-    rewrite itself consumes."""
-    import re as _re
-
-    literals: list[str] = []
-    parts: list[str] = []
-    last = 0
-    for lm in _re.finditer(r"'(?:[^']|'')*'", text):
-        if _re.search(r"\bAS\s+OF\s*$", text[: lm.start()], _re.IGNORECASE):
-            continue
-        parts.append(text[last: lm.start()])
-        parts.append(f"\x00{len(literals)}\x00")
-        literals.append(lm.group(0))
-        last = lm.end()
-    parts.append(text[last:])
-    return "".join(parts), literals
-
-
-def _unmask_literals(text: str, literals: list[str]) -> str:
-    import re as _re
-
-    return _re.sub(
-        r"\x00(\d+)\x00", lambda m: literals[int(m.group(1))], text
-    )
-
-
 def stamp_row_lineage(md: dict, files: list[dict]) -> tuple[int, int]:
     """Iceberg V3 row lineage: assign each NEWLY added data file a
     first-row-id range from the table's next-row-id high-water mark (files
@@ -691,40 +661,23 @@ class SparkCatalogIO:
             self._post_scan_report(namespace, name, md, snap, entries, where)
         return df
 
-    def _catalog_listing(self) -> dict[str, tuple[str, list[str], str]]:
-        """{qualified name → (kind, namespace levels, name)} for every
-        table and view, via a recursive namespace walk."""
-        namespaces = []
-        stack: list[list[str] | None] = [None]
-        while stack:
-            parent = stack.pop()
-            for ns in self.client.list_namespaces(parent):
-                namespaces.append(ns)
-                stack.append(ns)
-        refs: dict[str, tuple[str, list[str], str]] = {}
-        for ns in namespaces:
-            for ident in self.client.list_tables(ns):
-                q = ".".join([*ident["namespace"], ident["name"]])
-                refs[q] = ("table", ident["namespace"], ident["name"])
-            for ident in self.client.list_views(ns):
-                q = ".".join([*ident["namespace"], ident["name"]])
-                refs[q] = ("view", ident["namespace"], ident["name"])
-        return refs
-
-    def sql(self, query: str, _depth: int = 0, _refs: dict | None = None) -> DataFrame:
+    def sql(self, query: str, _depth: int = 0) -> DataFrame:
         """Run Spark SQL whose table references name CATALOG tables/views —
         the `spark.sql("select * from westeros.my_table")` client flow of
         the reference (/root/reference/examples/pyspark_example.py:30-36),
         without needing the Iceberg runtime jar.
 
-        Resolution is catalog-driven, not parser-driven: the catalog's own
-        namespace/table/view listing is matched against the query text
-        (longest qualified name first, identifier-boundary anchored), each
-        hit is loaded through the full read path (MoR deletes, schema
-        evolution, branch state all apply) into a temp view, and the query
-        text is rewritten to the view names. Supports Iceberg SQL time
-        travel per reference: `ns.t FOR VERSION AS OF <snapshot-id>` and
-        `ns.t FOR TIMESTAMP AS OF '<ts>'` (UTC). Views resolve through
+        Resolution is parser-driven (sources/resolve.py): Spark's own
+        parser finds the statement's table references, and each
+        multi-part name is looked up once in the catalog — no catalog
+        listing is read. A hit is loaded through the full read path (MoR
+        deletes, schema evolution, branch state all apply) into a temp
+        view, and exactly that reference's text is replaced by the view
+        name; literals, comments, columns and CTE names are never touched.
+        Supports Iceberg SQL time travel per reference:
+        `ns.t FOR VERSION AS OF <snapshot-id|'ref'>` and
+        `ns.t FOR TIMESTAMP AS OF '<ts>'` (UTC when naive), and the
+        metadata relations `ns.t.snapshots` etc. Views resolve through
         their stored SQL representation (spark dialect preferred),
         recursively, with unqualified names in a view body resolved
         against the view's default-namespace.
@@ -758,17 +711,8 @@ class SparkCatalogIO:
 
         Plan inspection (round 15): `EXPLAIN [EXTENDED|FORMATTED] <select>`
         returns the resolved plan WITHOUT executing it, headed by the
-        materialized-view rewrite verdict (_sql_explain).
-
-        String literals are masked before the textual rewrite (so a
-        literal containing `ns.table` is never rewritten) and restored
-        before execution; the literals following `AS OF` stay live because
-        they are part of the time-travel syntax itself."""
-        import hashlib
+        materialized-view rewrite verdict (_sql_explain)."""
         import re as _re
-
-        if _depth > 10:
-            raise ValueError("view resolution exceeded depth 10 (cycle?)")
 
         if _depth == 0:
             m = _re.match(
@@ -975,127 +919,9 @@ class SparkCatalogIO:
             if rewritten_df is not None:
                 return rewritten_df
 
-        # One catalog walk per TOP-LEVEL call; nested view resolution
-        # reuses the listing (a query can't reference objects created
-        # mid-execution, so refetching per recursion buys nothing).
-        refs = _refs if _refs is not None else self._catalog_listing()
+        from denali_spark.sources.resolve import resolve_sql
 
-        tt = (
-            r"(?:\s+FOR\s+VERSION\s+AS\s+OF\s+(?:(\d+)|'([^']+)')"
-            r"|\s+FOR\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)')?"
-        )
-        rewritten, literals = _mask_literals(query)
-
-        # ANSI: an unaliased table reference's correlation name is its
-        # bare (unqualified) table name — `FROM fj.facts JOIN fj.dims ON
-        # facts.k = dims.k` must resolve. The temp-view substitution
-        # would otherwise hide that name, so each replacement re-exposes
-        # it with `AS <bare-name>` UNLESS the reference already carries
-        # an explicit or implicit alias (then ANSI says the bare name is
-        # NOT visible, and appending one would be a syntax error).
-        _after_ref_keywords = frozenset((
-            "where", "join", "on", "group", "order", "having", "limit",
-            "union", "intersect", "except", "minus", "inner", "left",
-            "right", "full", "cross", "natural", "semi", "anti",
-            "lateral", "using", "when", "for", "window", "distribute",
-            "cluster", "sort", "offset", "pivot", "unpivot",
-            "tablesample", "and", "or", "not", "matched", "then",
-        ))
-
-        def _alias_tail(src: str, end: int, bare: str) -> str:
-            rest = src[end:]
-            if rest.lstrip()[:1] == "`":  # backtick-quoted alias follows
-                return ""
-            nxt = _re.match(r"\s*([A-Za-z_][A-Za-z_0-9]*)", rest)
-            if nxt is None:  # punctuation / end-of-text: no alias follows
-                return f" AS {bare}"
-            tok = nxt.group(1).lower()
-            if tok in _after_ref_keywords:
-                return f" AS {bare}"
-            return ""  # `AS x` or an implicit alias identifier follows
-
-        # Metadata-relation addressing (Iceberg SQL's `db.t.snapshots`
-        # family): a pre-pass resolves `ns.table.<kind>` names into
-        # metadata_table relations. The main loop below never touches
-        # them — its name pattern refuses a trailing dot — so the order
-        # is for clarity, not correctness. Snapshot-scoped kinds accept
-        # FOR VERSION AS OF <snapshot-id|'ref'> like read_table.
-        from denali_spark.sources.metadata_tables import KINDS, metadata_table
-
-        lowered = rewritten.lower()
-        for q in sorted(refs, key=len, reverse=True):
-            kind, ns, name = refs[q]
-            if kind != "table" or (q.lower() + ".") not in lowered:
-                continue
-            for mk in KINDS:
-                if f"{q}.{mk}".lower() not in lowered:
-                    continue
-                mpat = _re.compile(
-                    r"(?<![\w.`])" + _re.escape(q) + r"\." + mk
-                    + r"(?![\w.`])" + tt,
-                    _re.IGNORECASE,
-                )
-
-                def mrepl(m, ns=ns, name=name, mk=mk, q=q):
-                    snap_id = int(m.group(1)) if m.group(1) else None
-                    mref = m.group(2)
-                    if m.group(3):
-                        raise ValueError(
-                            f"{q}.{mk}: FOR TIMESTAMP AS OF is not supported "
-                            "on metadata tables; use FOR VERSION AS OF "
-                            "<snapshot-id|'ref'>"
-                        )
-                    df = metadata_table(
-                        self, ns, name, mk, snapshot_id=snap_id, ref=mref
-                    )
-                    key = f"{q}.{mk}|{snap_id}|{mref}"
-                    view = "__denali_" + hashlib.md5(key.encode()).hexdigest()[:10]
-                    df.createOrReplaceTempView(view)
-                    return view + _alias_tail(m.string, m.end(), mk)
-
-                rewritten = mpat.sub(mrepl, rewritten)
-            lowered = rewritten.lower()
-
-        for q in sorted(refs, key=len, reverse=True):
-            kind, ns, name = refs[q]
-            pat = _re.compile(
-                r"(?<![\w.`])" + _re.escape(q) + r"(?![\w.`])" + tt,
-                _re.IGNORECASE,
-            )
-
-            def repl(m, kind=kind, ns=ns, name=name, q=q):
-                snap_id = int(m.group(1)) if m.group(1) else None
-                ref = m.group(2)  # VERSION AS OF 'branch-or-tag'
-                as_of_ms = None
-                if m.group(3):
-                    import datetime as _dt
-
-                    dt = _dt.datetime.fromisoformat(m.group(3))
-                    if dt.tzinfo is None:
-                        dt = dt.replace(tzinfo=_dt.timezone.utc)
-                    as_of_ms = int(dt.timestamp() * 1000)
-                key = f"{q}|{snap_id}|{ref}|{as_of_ms}"
-                view = "__denali_" + hashlib.md5(key.encode()).hexdigest()[:10]
-                if kind == "table":
-                    df = self.read_table(
-                        ns, name, snapshot_id=snap_id, ref=ref, as_of_ms=as_of_ms
-                    )
-                else:
-                    if ref is not None:
-                        raise ValueError(
-                            f"view {q!r}: FOR VERSION AS OF '<name>' is not "
-                            "applicable — views have numbered versions, not "
-                            "branches/tags; use the version id or a timestamp"
-                        )
-                    df = self._view_df(
-                        ns, name, _depth, refs,
-                        version_id=snap_id, as_of_ms=as_of_ms,
-                    )
-                df.createOrReplaceTempView(view)
-                return view + _alias_tail(m.string, m.end(), name)
-
-            rewritten = pat.sub(repl, rewritten)
-        return self.spark.sql(_unmask_literals(rewritten, literals))
+        return resolve_sql(self, query, _depth)
 
     # Iceberg Spark's stored procedures (CALL catalog.system.<proc>(...))
     # mapped onto the engine's maintenance/branch functions. Values are
@@ -2017,13 +1843,13 @@ class SparkCatalogIO:
             if scope is not None:
                 idents = lister(scope)
             else:
-                idents = [
-                    {"namespace": ns_levels, "name": nm}
-                    for _q, (kind, ns_levels, nm) in sorted(
-                        self._catalog_listing().items()
-                    )
-                    if kind == ("table" if what == "TABLES" else "view")
-                ]
+                # unscoped: walk every namespace, nested ones included
+                idents, stack = [], [None]
+                while stack:
+                    for ns in self.client.list_namespaces(stack.pop()):
+                        stack.append(ns)
+                        idents.extend(lister(ns))
+                idents.sort(key=lambda i: ".".join([*i["namespace"], i["name"]]))
             col = "tableName" if what == "TABLES" else "viewName"
             rows = [
                 (".".join(i["namespace"]), i["name"]) for i in idents
@@ -2044,13 +1870,13 @@ class SparkCatalogIO:
             )
         if not rest:
             raise ValueError(f"SHOW {what} requires a table name")
+        parts = rest.split(".")
         if (
-            what == "CREATE TABLE"
-            and self._catalog_listing().get(rest, ("table",))[0] == "view"
+            what == "CREATE TABLE" and len(parts) > 1
+            and self.client.view_exists(parts[:-1], parts[-1])
         ):
             # Spark answers SHOW CREATE TABLE on views with the CREATE
             # VIEW statement; render from stored metadata (no execution)
-            parts = rest.split(".")
             vmd = self.client.load_view(parts[:-1], parts[-1])["metadata"]
             version = next(
                 v for v in vmd["versions"]
@@ -2141,12 +1967,10 @@ class SparkCatalogIO:
         CURRENT schema (docs travel with the field, so evolution shows
         through), a partition section for partitioned tables, and —
         extended — the table-metadata block real Spark prints."""
-        refs = self._catalog_listing()
-        kind = refs.get(qualified, ("table",))[0]
-        if kind == "view":
+        parts = qualified.split(".")
+        if len(parts) > 1 and self.client.view_exists(parts[:-1], parts[-1]):
             from denali_spark.sources.schema_evolution import type_to_ddl as _ttd
 
-            parts = qualified.split(".")
             vmd = self.client.load_view(parts[:-1], parts[-1])["metadata"]
             version = next(
                 v for v in vmd["versions"]
@@ -2907,17 +2731,15 @@ class SparkCatalogIO:
         )
 
     def _view_df(
-        self, ns: list[str], name: str, depth: int, refs: dict,
+        self, md: dict, ns: list[str], name: str, depth: int,
         version_id: int | None = None, as_of_ms: int | None = None,
     ) -> DataFrame:
-        """Materialize a catalog view through its stored SQL representation
-        (spark dialect preferred, else the first), resolving nested
-        references recursively. Unqualified table names in the view body
-        are qualified with the view's default-namespace — in FROM/JOIN
-        position and as members of a comma-separated FROM list (so a
-        COLUMN that happens to share a table's name is left alone) and
-        case-insensitively (SQL identifiers), replaced with the catalog's
-        stored casing.
+        """Materialize a catalog view from its loaded metadata `md` through
+        its stored SQL representation (spark dialect preferred, else the
+        first). The body resolves like a top-level statement one level
+        deeper (sources/resolve.py), except that its unqualified table
+        names are looked up in the view's default-namespace — only names
+        in relation position, and never a name the body defines as a CTE.
 
         Time travel: `version_id` pins an exact entry of the view's
         version list; `as_of_ms` resolves through the version-log (the
@@ -2925,9 +2747,8 @@ class SparkCatalogIO:
         Iceberg view metadata versions exactly as the reference models it
         (/root/reference/iceberg-overload/view/metadata.go:35-44,
         Versions + VersionLog)."""
-        import re as _re
+        from denali_spark.sources.resolve import resolve_sql
 
-        md = self.client.load_view(ns, name)["metadata"]
         if version_id is not None:
             version = next(
                 (v for v in md["versions"] if v["version-id"] == version_id),
@@ -2956,56 +2777,8 @@ class SparkCatalogIO:
         if not reps:
             raise ValueError(f"view {'.'.join([*ns, name])} has no SQL representation")
         rep = next((r for r in reps if r.get("dialect") == "spark"), reps[0])
-        body, body_literals = _mask_literals(rep["sql"])
         default_ns = version.get("default-namespace") or ns
-        by_bare = {
-            bare.lower(): q
-            for q, (_kind, ident_ns, bare) in refs.items()
-            if ident_ns == default_ns
-        }
-        for bare_l, q in by_bare.items():
-            body = _re.sub(
-                r"(\b(?:FROM|JOIN)\s+)" + _re.escape(bare_l) + r"(?![\w.`])",
-                lambda m, q=q: m.group(1) + q,
-                body,
-                flags=_re.IGNORECASE,
-            )
-
-        def qualify_from_list(m):
-            # `FROM a, b c` (comma join) — qualify the leading identifier
-            # of every comma-separated item (the FROM/JOIN pass above
-            # already handled the first). The segment stops at parens and
-            # clause keywords, so `IN (1,2)`, subqueries, and
-            # `ORDER BY c, d` never contribute items.
-            head, seg = m.group(1), m.group(2)
-            tail = ""
-            cut = _re.search(
-                r"\b(WHERE|GROUP|ORDER|HAVING|LIMIT|UNION|EXCEPT|"
-                r"INTERSECT|JOIN|ON|WINDOW)\b",
-                seg, _re.IGNORECASE,
-            )
-            if cut:
-                seg, tail = seg[: cut.start()], seg[cut.start():]
-
-            def item(p):
-                mm = _re.match(r"(\s*)([A-Za-z_][\w.]*)(?![\w.`])(.*)", p, _re.DOTALL)
-                if mm:
-                    lead, word, rest = mm.groups()
-                    if "." not in word and word.lower() in by_bare:
-                        return lead + by_bare[word.lower()] + rest
-                return p
-
-            return head + ",".join(item(p) for p in seg.split(",")) + tail
-
-        body = _re.sub(
-            r"(\bFROM\s+)([^,();]+(?:,[^();]+)+)",
-            qualify_from_list,
-            body,
-            flags=_re.IGNORECASE,
-        )
-        return self.sql(
-            _unmask_literals(body, body_literals), _depth=depth + 1, _refs=refs
-        )
+        return resolve_sql(self, rep["sql"], depth + 1, default_ns=default_ns)
 
     def _post_scan_report(self, namespace, name, md, snap, entries, where) -> None:
         """Fire-and-forget scan report to the catalog's metrics endpoint

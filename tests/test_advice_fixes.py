@@ -507,3 +507,45 @@ def test_widen_build_input_no_rdd_planning(spark, tmp_path, monkeypatch):
         assert widen_build_input(dfm, rows=600) is dfm
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+
+
+def test_widen_build_input_sizes_object_store_inputs():
+    """Input sizes come from each path's Hadoop FileSystem: an s3a:// scan
+    whose natural splits already cover the target is returned untouched
+    (os.stat raised on such paths, so every build paid a repartition)."""
+    from types import SimpleNamespace
+
+    from denali_spark.engine.index_cache import widen_build_input
+
+    class Path:
+        def __init__(self, p):
+            assert p.startswith("s3a://")
+
+        def getFileSystem(self, conf):
+            status = SimpleNamespace(getLen=lambda: 64 << 20)
+            return SimpleNamespace(getFileStatus=lambda path: status)
+
+    confs = {
+        "spark.sql.files.maxPartitionBytes": str(128 << 20),
+        "spark.sql.files.openCostInBytes": str(4 << 20),
+    }
+    spark = SimpleNamespace(
+        sparkContext=SimpleNamespace(defaultParallelism=8),
+        conf=SimpleNamespace(get=confs.__getitem__),
+        _jvm=SimpleNamespace(org=SimpleNamespace(apache=SimpleNamespace(
+            hadoop=SimpleNamespace(fs=SimpleNamespace(Path=Path))))),
+        _jsc=SimpleNamespace(hadoopConfiguration=lambda: None),
+    )
+
+    class ObjectStoreScan:
+        sparkSession = spark
+
+        def inputFiles(self):
+            return [f"s3a://corpus/docs/part-{i}.parquet" for i in range(16)]
+
+        def repartition(self, n):
+            raise AssertionError(f"repartition({n}) of a wide scan")
+
+    # 16 files of 64 MB + 4 MB open cost: one per 128 MB split -> 16 >= 8
+    df = ObjectStoreScan()
+    assert widen_build_input(df, rows=1 << 20) is df

@@ -394,6 +394,32 @@ def test_load_missing_table_404(catalog):
     assert exc.value.status == 404
 
 
+def test_keep_alive_connection_has_no_delayed_ack_stall(catalog):
+    """A client that reuses one connection (pyiceberg's requests.Session,
+    Iceberg's Java REST client) must not wait out a delayed ACK per
+    response: a loadTable costs well under 1 ms on loopback, against
+    ~40 ms when the server's split header/body writes sit behind Nagle."""
+    import http.client
+    import time
+    from urllib.parse import urlparse
+
+    catalog.create_namespace(["ka"])
+    catalog.create_table(["ka"], "t", SCHEMA_ID_NAME)
+    uri = urlparse(catalog.uri)
+    conn = http.client.HTTPConnection(uri.hostname, uri.port, timeout=10)
+    try:
+        t0 = time.perf_counter()
+        for _ in range(200):
+            conn.request("GET", "/v1/namespaces/ka/tables/t")
+            resp = conn.getresponse()
+            resp.read()
+            assert resp.status == 200
+        elapsed = time.perf_counter() - t0
+    finally:
+        conn.close()
+    assert elapsed < 2.0, f"200 keep-alive loadTable calls took {elapsed:.2f}s"
+
+
 # --- views (fully implemented; reference stubs these) ---------------------
 
 

@@ -12,6 +12,7 @@ import pathlib
 import py_compile
 import subprocess
 import sys
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
@@ -45,47 +46,58 @@ def test_example_compiles(path):
     py_compile.compile(str(path), doraise=True)
 
 
+# Peak RSS of one example's whole process tree (python, its JVM and the
+# JVM's python workers) at SPARK_GRAFT_DRIVER_MEM=3g, sampled every 0.2 s:
+# 3.1 GB for sql_dml.py, the heaviest, and 0.9-2.9 GB for the others. The
+# 3g heap cap bounds the JVM, so 3.5 GB per example leaves headroom.
+EXAMPLE_BUDGET_KB = 3_500 * 1024
+
+
+def _mem_available_kb() -> int:
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemAvailable:"):
+                return int(line.split()[1])
+    return 0
+
+
 @pytest.fixture(scope="module")
-def example_procs(tmp_path_factory):
-    """Launch every executed example CONCURRENTLY (r17: they ran serially at
-    20-55s each, ~6 min of suite wall for work that is almost entirely
-    per-process JVM latency). Each example is its own subprocess with its
-    own SparkSession and tmpdir warehouse, so they are independent by
-    construction; the shared sf0.001 index caches are build-once behind an
-    atomic rename that tolerates concurrent builders (first writer wins,
-    losers discard an equivalent result). Output goes to files, not pipes —
-    13 unread PIPE buffers would deadlock the unwaited processes. Driver
-    heap is capped so 13 concurrent JVMs stay far under the box."""
+def example_runs(tmp_path_factory):
+    """Run the executed examples through a worker pool sized by memory:
+    MemAvailable at launch divided by EXAMPLE_BUDGET_KB, at least one. Each
+    example is its own subprocess with its own SparkSession and tmpdir
+    warehouse, so they are independent by construction; the shared
+    sf0.001 index caches are build-once behind an atomic rename that
+    tolerates concurrent builders. Launching all of them at once (3 GB
+    heaps each beside the suite's own JVM) let the OOM killer take the
+    suite's JVM on a 16 GB host, failing every later Spark test. Output
+    goes to files, not pipes."""
     out_dir = tmp_path_factory.mktemp("example-logs")
     env = dict(os.environ, SPARK_GRAFT_CPUS="8", SPARK_GRAFT_DRIVER_MEM="3g")
-    procs = {}
-    for name in EXECUTED:
-        log = open(out_dir / f"{name}.log", "w+")
-        procs[name] = (
-            subprocess.Popen(
-                [sys.executable, str(EXAMPLES_DIR / name)],
-                stdout=log, stderr=subprocess.STDOUT, text=True, env=env,
-            ),
-            log,
-        )
-    yield procs
-    for proc, log in procs.values():
-        if proc.poll() is None:
-            proc.kill()
-        log.close()
+    workers = max(1, min(len(EXECUTED), _mem_available_kb() // EXAMPLE_BUDGET_KB))
+
+    def run(name):
+        log = out_dir / f"{name}.log"
+        with open(log, "w") as out:
+            try:
+                rc = subprocess.run(
+                    [sys.executable, str(EXAMPLES_DIR / name)],
+                    stdout=out, stderr=subprocess.STDOUT, env=env, timeout=600,
+                ).returncode
+            except subprocess.TimeoutExpired:
+                rc = None
+        return rc, log
+
+    pool = ThreadPoolExecutor(max_workers=workers)
+    yield {name: pool.submit(run, name) for name in EXECUTED}
+    pool.shutdown(cancel_futures=True)
 
 
 @pytest.mark.parametrize("name", EXECUTED)
-def test_example_executes(name, example_procs):
-    proc, log = example_procs[name]
-    try:
-        rc = proc.wait(timeout=600)
-    except subprocess.TimeoutExpired:
-        proc.kill()
-        pytest.fail(f"{name} timed out after 600s")
-    log.flush()
-    log.seek(0)
-    tail = log.read()[-3000:]
+def test_example_executes(name, example_runs):
+    rc, log = example_runs[name].result()
+    tail = log.read_text()[-3000:]
+    assert rc is not None, f"{name} timed out after 600s:\noutput tail: {tail}"
     assert rc == 0, f"{name} failed (rc={rc}):\noutput tail: {tail}"
 
 

@@ -1,7 +1,8 @@
 """SQL over catalog tables: `io.sql("select * from ns.table")` — the
 reference's pyspark client flow (examples/pyspark_example.py) without the
-Iceberg runtime jar. Resolution is catalog-listing-driven; time travel and
-view representations resolve through the same read path as read_table."""
+Iceberg runtime jar. Resolution is parser-driven: the names a statement uses
+are looked up one by one, never by listing the catalog; time travel and view
+representations resolve through the same read path as read_table."""
 
 from __future__ import annotations
 
@@ -1312,3 +1313,52 @@ def test_explain_update_where_split_is_literal_aware(spark, io):
     plan = r["plan"]
     assert '"match": "id < 3"' in plan
     assert _snapshots(io, ["expdml4"], "t") == 1
+
+
+# --- parser-driven resolution --------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def orders(spark, io):
+    io.write_table(spark.range(0, 100).select("id"), ["cte"], "orders", mode="overwrite")
+
+
+def test_view_body_cte_shadows_table_name(spark, io, orders):
+    """Inside its own definition a CTE named like a table reads the table;
+    after it, the name is the CTE — never re-qualified to the table."""
+    io.client.create_view(
+        ["cte"], "first3",
+        "WITH orders AS (SELECT id FROM orders WHERE id < 3) "
+        "SELECT COUNT(*) AS n FROM orders",
+    )
+    assert io.sql("SELECT n FROM cte.first3").collect()[0]["n"] == 3
+
+
+def test_backticked_table_name_resolves(spark, io, orders):
+    out = io.sql("SELECT COUNT(*) AS n FROM `cte`.`orders`").collect()
+    assert out[0]["n"] == 100
+
+
+def test_statement_requests_do_not_grow_with_catalog(spark, io, orders):
+    """A SELECT looks up the names it uses, not the catalog: its request
+    count is the same after 20 unrelated namespaces appear."""
+    stmt = "SELECT COUNT(*) AS n FROM cte.orders"
+    io.sql(stmt).collect()  # the MV-rewrite pass lists MVs once per session
+    calls = []
+    request_h = io.client._request_h
+
+    def counting(*args, **kwargs):
+        calls.append(args[:2])
+        return request_h(*args, **kwargs)
+
+    io.client._request_h = counting
+    try:
+        io.sql(stmt).collect()
+        before = list(calls)
+        for i in range(20):
+            io.client.create_namespace([f"unrelated{i:02d}"])
+        calls.clear()
+        io.sql(stmt).collect()
+    finally:
+        del io.client._request_h
+    assert calls == before
