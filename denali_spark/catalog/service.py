@@ -32,8 +32,10 @@ Namespace levels travel in URLs separated by the unit separator %1F
 
 from __future__ import annotations
 
+import contextlib
 import json
 import re
+import socket
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlparse
@@ -1117,5 +1119,13 @@ class CatalogServer:
         return self
 
     def stop(self) -> None:
-        self.httpd.shutdown()
+        # shutdown() returns once serve_forever sees its request, which it
+        # checks only when its select wakes (every 0.5 s when idle); a
+        # connection wakes the select at once
+        stopper = threading.Thread(target=self.httpd.shutdown)
+        stopper.start()
+        while stopper.is_alive():
+            with contextlib.suppress(OSError):  # already stopped
+                socket.create_connection(self.httpd.server_address).close()
+            stopper.join(0.01)
         self.httpd.server_close()

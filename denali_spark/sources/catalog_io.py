@@ -456,7 +456,9 @@ class SparkCatalogIO:
         self, spark: SparkSession, catalog_uri: str, token: str | None = None
     ):
         """`token`: bearer token for OAuth-enabled catalogs (obtain one
-        via CatalogClient.authenticate)."""
+        via CatalogClient.authenticate). The session caches no MV listing:
+        the rewrite pass finds MVs through their sources' `ivm.dependent.*`
+        entries, so another client's MV DDL shows on the next SELECT."""
         self.spark = spark
         self.client = CatalogClient(catalog_uri, token=token)
         self.warehouse = self.client.config()["defaults"]["warehouse"]
@@ -467,13 +469,6 @@ class SparkCatalogIO:
         self.mv_rewrite = "fresh-only"
         # Outcome of the last SELECT's rewrite attempt (None = base path).
         self.last_mv_rewrite: dict | None = None
-        # Cached MV identities for the rewrite pass (None = unknown):
-        # populated by ONE full catalog walk, kept so an MV-free catalog
-        # never pays per-table metadata loads again; CREATE/DROP
-        # MATERIALIZED VIEW through this session invalidate it, and MVs
-        # created by ANOTHER client become visible after
-        # invalidate_mv_cache() (or the next DDL here).
-        self._mv_listing_cache: list[tuple[list[str], str]] | None = None
 
     # --- read path ---------------------------------------------------------
 
@@ -1369,16 +1364,6 @@ class SparkCatalogIO:
             raise ValueError(f"unsupported CREATE TABLE clause {tail[:60]!r}")
         return partition_by, properties
 
-    def invalidate_mv_cache(self) -> None:
-        """Forget the cached materialized-view listing (the rewrite pass
-        re-walks the catalog on the next SELECT) — call after another
-        client created or dropped an MV. Also drops the topup delta
-        cache: its keys are snapshot-identity-exact so it can never serve
-        a stale delta, but releasing the checkpointed blocks alongside
-        the listing keeps one invalidation call the whole story."""
-        self._mv_listing_cache = None
-        self._topup_delta_cache = {}
-
     def _sql_create_mview(self, qualified: str, select_sql: str) -> DataFrame:
         """CREATE MATERIALIZED VIEW ns.mv AS <select> — an incrementally
         MAINTAINED rollup (sources/ivm.py): the parsed spec is stamped into
@@ -1491,10 +1476,8 @@ class SparkCatalogIO:
         self, kind: str, qualified: str, *, if_exists: bool, purge: bool
     ) -> DataFrame:
         """DROP TABLE [IF EXISTS] ns.t [PURGE] / DROP VIEW ns.v /
-        DROP NAMESPACE ns — §2.A delete endpoints as SQL."""
-        # a dropped table may have been an MV — the rewrite pass must not
-        # keep resolving it from the cached listing
-        self._mv_listing_cache = None
+        DROP NAMESPACE ns — §2.A delete endpoints as SQL. Dropping an MV
+        also removes its entries from its sources."""
         levels = qualified.split(".")
         if kind == "NAMESPACE":
             if purge:
@@ -1513,13 +1496,20 @@ class SparkCatalogIO:
                 f"unqualified name {qualified!r}: use ns.{kind.lower()}"
             )
         if kind == "TABLE":
-            if not self.client.table_exists(namespace, name):
+            from denali_spark.sources.ivm import unlist_materialized_view
+
+            try:
+                md = self.client.load_table(namespace, name)["metadata"]
+            except CatalogHTTPError as exc:
+                if exc.status != 404:
+                    raise
                 if if_exists:
                     return self._alter_summary(
                         qualified, "drop-table", "absent (noop)"
                     )
-                raise ValueError(f"table {qualified!r} does not exist")
+                raise ValueError(f"table {qualified!r} does not exist") from None
             self.client.drop_table(namespace, name, purge=purge)
+            unlist_materialized_view(self, md)
             return self._alter_summary(
                 qualified, "drop-table", "purged" if purge else "dropped"
             )
@@ -1792,8 +1782,8 @@ class SparkCatalogIO:
         )
 
     def _sql_show(self, what: str, rest: str) -> DataFrame:
-        """SHOW NAMESPACES [IN parent] / SHOW TABLES|VIEWS [IN ns] /
-        SHOW TBLPROPERTIES ns.t / SHOW PARTITIONS ns.t /
+        """SHOW NAMESPACES [IN parent] / SHOW TABLES|VIEWS|MATERIALIZED
+        VIEWS [IN ns] / SHOW TBLPROPERTIES ns.t / SHOW PARTITIONS ns.t /
         SHOW CREATE TABLE ns.t — the Spark-SQL catalog-inspection surface
         over the REST listing endpoints (§2.A list operations)."""
         import re as _re
@@ -1806,39 +1796,10 @@ class SparkCatalogIO:
                 (".".join(ns),) for ns in self.client.list_namespaces(scope)
             ]
             return self.spark.createDataFrame(rows, "namespace string")
-        if what == "MATERIALIZED VIEWS":
-            # catalog walk filtered on the stamped `ivm.spec` property,
-            # with per-view freshness (watermark == source current
-            # snapshot) so operators can see at a glance what needs a
-            # REFRESH — completing the round-13 MV DDL's discoverability
-            from denali_spark.sources.ivm import (
-                JoinRollupSpec,
-                list_materialized_views,
-                mv_freshness,
-            )
-
-            rows = []
-            for mv_ns, mv_name, spec, mv_md in list_materialized_views(self):
-                if scope is not None and mv_ns != scope:
-                    continue
-                if isinstance(spec, JoinRollupSpec):
-                    sources = (f"{spec._qualified_left()} JOIN "
-                               f"{spec._qualified_right()}")
-                else:
-                    sources = spec._qualified_source()
-                rows.append((
-                    ".".join(mv_ns), mv_name, sources,
-                    mv_freshness(self, spec, mv_md),
-                ))
-            return self.spark.createDataFrame(
-                sorted(rows),
-                "namespace string, mviewName string, sources string, "
-                "fresh boolean",
-            )
-        if what in ("TABLES", "VIEWS"):
+        if what in ("TABLES", "VIEWS", "MATERIALIZED VIEWS"):
             lister = (
-                self.client.list_tables if what == "TABLES"
-                else self.client.list_views
+                self.client.list_views if what == "VIEWS"
+                else self.client.list_tables
             )
             if scope is not None:
                 idents = lister(scope)
@@ -1850,6 +1811,27 @@ class SparkCatalogIO:
                         stack.append(ns)
                         idents.extend(lister(ns))
                 idents.sort(key=lambda i: ".".join([*i["namespace"], i["name"]]))
+            if what == "MATERIALIZED VIEWS":
+                # the tables whose `ivm.spec` property marks them as MVs,
+                # with per-view freshness (watermark == source current
+                # snapshot) so operators can see what needs a REFRESH
+                from denali_spark.sources.ivm import (
+                    list_materialized_views,
+                    mv_watermark_state,
+                    sources_label,
+                )
+
+                rows = [
+                    (".".join(mv_ns), mv_name, sources_label(spec),
+                     mv_watermark_state(self, spec, mv_md) == "fresh")
+                    for mv_ns, mv_name, spec, mv_md
+                    in list_materialized_views(self, idents)
+                ]
+                return self.spark.createDataFrame(
+                    sorted(rows),
+                    "namespace string, mviewName string, sources string, "
+                    "fresh boolean",
+                )
             col = "tableName" if what == "TABLES" else "viewName"
             rows = [
                 (".".join(i["namespace"]), i["name"]) for i in idents
@@ -2020,25 +2002,17 @@ class SparkCatalogIO:
             # and whether a REFRESH is due — the DESCRIBE half of the
             # SHOW MATERIALIZED VIEWS discoverability surface
             from denali_spark.sources.ivm import (
-                JoinRollupSpec as _JRS,
                 LEFT_WATERMARK_KEY as _LWK,
                 RIGHT_WATERMARK_KEY as _RWK,
                 WATERMARK_KEY as _WK,
-                mv_freshness as _fresh,
+                mv_watermark_state,
+                sources_label,
                 spec_from_json as _sfj,
             )
 
             mv_spec = _sfj(mv_raw)
             rows.append(("# Materialized View", "", None))
-            if isinstance(mv_spec, _JRS):
-                rows.append((
-                    "Sources",
-                    f"{mv_spec._qualified_left()} JOIN "
-                    f"{mv_spec._qualified_right()}",
-                    None,
-                ))
-            else:
-                rows.append(("Sources", mv_spec._qualified_source(), None))
+            rows.append(("Sources", sources_label(mv_spec), None))
             ref = md.get("refs", {}).get(MAIN)
             if ref is not None:
                 snap = next(
@@ -2049,7 +2023,8 @@ class SparkCatalogIO:
                 for wk in (_WK, _LWK, _RWK):
                     if wk in summary:
                         rows.append((wk, summary[wk], None))
-            rows.append(("Fresh", str(_fresh(self, mv_spec, md)).lower(), None))
+            fresh = mv_watermark_state(self, mv_spec, md) == "fresh"
+            rows.append(("Fresh", str(fresh).lower(), None))
         if extended:
             rows.append(("# Detailed Table Information", "", None))
             rows.extend([
@@ -2093,7 +2068,10 @@ class SparkCatalogIO:
 
         m = _re.match(r"RENAME\s+TO\s+([\w.]+)$", act, _re.IGNORECASE)
         if m:
-            ns, name, _md = self._dml_target(qualified)
+            from denali_spark.sources.ivm import refuse_rename
+
+            ns, name, md = self._dml_target(qualified)
+            refuse_rename(self, ns, name, md)
             dparts = m.group(1).split(".")
             dest_ns, dest = (dparts[:-1] or ns), dparts[-1]
             self.client.rename_table((ns, name), (dest_ns, dest))

@@ -82,7 +82,7 @@ from denali_spark.catalog.client import CatalogHTTPError
 from denali_spark.sources.catalog_io import MAIN, SparkCatalogIO, split_entries
 from denali_spark.sources.changelog import read_changes
 from denali_spark.sources.expressions import and_, file_might_match, gt_eq, lt_eq
-from denali_spark.sources.row_ops import _commit_cow, _read_candidates
+from denali_spark.sources.row_ops import _commit_cow, _read_candidates, _retrying
 
 WATERMARK_KEY = "ivm.source-snapshot-id"
 SOURCE_KEY = "ivm.source-table"
@@ -364,7 +364,7 @@ def create_rollup(io: SparkCatalogIO, spec: RollupSpec) -> dict:
             "ivm.refresh-kind": "full",
         },
     )
-    _stamp_spec(io, spec)
+    _stamp_spec(io, spec, res["metadata"])
     return {"noop": False, "kind": "full", "source_snapshot_id": src_snap,
             "metadata": res["metadata"]}
 
@@ -885,7 +885,7 @@ def create_join_rollup(io: SparkCatalogIO, spec: JoinRollupSpec) -> dict:
             "ivm.refresh-kind": "full",
         },
     )
-    _stamp_spec(io, spec)
+    _stamp_spec(io, spec, res["metadata"])
     return {"noop": False, "kind": "full", "left_snapshot_id": l_snap,
             "right_snapshot_id": r_snap, "metadata": res["metadata"]}
 
@@ -1113,6 +1113,8 @@ def refresh_join_rollup(io: SparkCatalogIO, spec: JoinRollupSpec) -> dict:
 # ---------------------------------------------------------------------------
 
 SPEC_PROPERTY = "ivm.spec"
+# `ivm.dependent.<ns.mv>` on a source table lists one MV that reads it
+DEPENDENT_PREFIX = "ivm.dependent."
 
 
 def _parse_agg_item(item: str):
@@ -1322,22 +1324,69 @@ def spec_to_json(spec: "RollupSpec | JoinRollupSpec") -> str:
     return json.dumps(d, sort_keys=True)
 
 
-def _stamp_spec(io: SparkCatalogIO, spec: "RollupSpec | JoinRollupSpec") -> None:
-    """Stamp the spec into the target's ivm.spec table property. Called by
-    BOTH create paths (SQL and programmatic) so every maintained rollup is
-    uniformly discoverable: SHOW MATERIALIZED VIEWS lists it, the rewrite
-    pass may serve it, and — critically — run_maintenance refreshes it
-    BEFORE snapshot expiry. An unstamped programmatic rollup used to be a
-    footgun: aggressive source expiry could strand its watermark because
-    the dependent walk only discovers stamped specs."""
-    md = io.client.load_table(spec.target_namespace, spec.target_name)["metadata"]
-    io.client.commit_table(
+def _sources(spec: "RollupSpec | JoinRollupSpec") -> list[tuple[list[str], str]]:
+    if isinstance(spec, JoinRollupSpec):
+        return [(spec.left_namespace, spec.left_name),
+                (spec.right_namespace, spec.right_name)]
+    return [(spec.source_namespace, spec.source_name)]
+
+
+def sources_label(spec: "RollupSpec | JoinRollupSpec") -> str:
+    """`ns.src`, or `ns.left JOIN ns.right` for a join view."""
+    return " JOIN ".join(".".join([*ns, n]) for ns, n in _sources(spec))
+
+
+def _watermarks(md: dict, spec: "RollupSpec | JoinRollupSpec") -> list[int]:
+    if isinstance(spec, JoinRollupSpec):
+        return list(_join_watermarks(md, spec))
+    return [_current_watermark(md, spec)]
+
+
+def _entry(spec: "RollupSpec | JoinRollupSpec") -> str:
+    return DEPENDENT_PREFIX + ".".join([*spec.target_namespace, spec.target_name])
+
+
+def _stamp_spec(io: SparkCatalogIO, spec: "RollupSpec | JoinRollupSpec",
+                md: dict) -> None:
+    """Stamp the spec into the MV's ivm.spec property (`md`: the MV's
+    metadata from its build) and list the MV on each source as
+    `ivm.dependent.<ns.mv>`, in one /v1/transactions/commit. Both create
+    paths (SQL and programmatic) call this, so the rewrite pass and
+    run_maintenance find every MV through its sources. One key per MV:
+    concurrent CREATEs on one source commute, and a 409 from a concurrent
+    source commit is safe to retry as is."""
+    def change(ns, name, requirements, props):
+        return {"identifier": {"namespace": ns, "name": name},
+                "requirements": requirements,
+                "updates": [{"action": "set-properties", "updates": props}]}
+
+    changes = [change(
         spec.target_namespace, spec.target_name,
-        requirements=[{"type": "assert-table-uuid", "uuid": md["table-uuid"]}],
-        updates=[{"action": "set-properties",
-                  "updates": {SPEC_PROPERTY: spec_to_json(spec)}}],
-    )
-    io._mv_listing_cache = None  # a new MV exists — the rewrite must see it
+        [{"type": "assert-table-uuid", "uuid": md["table-uuid"]}],
+        {SPEC_PROPERTY: spec_to_json(spec)},
+    )]
+    changes += [change(ns, name, [], {_entry(spec): "true"})
+                for ns, name in _sources(spec)]
+    _retrying(lambda: io.client.commit_transaction(changes))
+
+
+def unlist_materialized_view(io: SparkCatalogIO, md: dict) -> None:
+    """After DROP of a table whose metadata was `md`: if it was an MV,
+    remove its entry from each source that still lists it."""
+    raw = md.get("properties", {}).get(SPEC_PROPERTY)
+    if raw is None:
+        return
+    spec = spec_from_json(raw)
+    for ns, name in _sources(spec):
+        try:
+            props = io.client.load_table(ns, name)["metadata"]["properties"]
+            if _entry(spec) in props:
+                io.client.commit_table(ns, name, requirements=[], updates=[
+                    {"action": "remove-properties", "removals": [_entry(spec)]}
+                ])
+        except CatalogHTTPError as exc:
+            if exc.status != 404:
+                raise
 
 
 def spec_from_json(raw: str) -> "RollupSpec | JoinRollupSpec":
@@ -1381,48 +1430,65 @@ def refresh_materialized_view(io: SparkCatalogIO, namespace: list[str],
 
 
 def list_materialized_views(
-    io: SparkCatalogIO,
+    io: SparkCatalogIO, tables: list[dict],
 ) -> list[tuple[list[str], str, "RollupSpec | JoinRollupSpec", dict]]:
-    """Every maintained MV in the catalog as (namespace, name, spec,
-    metadata). Walks the namespace tree via the catalog listing —
-    metadata-only, bounded by table count.
-
-    Cost note: this loads EVERY table's metadata (one catalog call per
-    table) — the only place the stamped spec lives. Fine at maintenance /
-    rewrite-candidate cadence on this in-process catalog; a production
-    REST catalog at 100 TB scale would index the `ivm.spec` property
-    server-side instead of walking."""
+    """The maintained MVs among `tables` (catalog table identifiers) as
+    (namespace, name, spec, metadata). One load per table, so only SHOW
+    MATERIALIZED VIEWS uses it: the rewrite pass and maintenance find MVs
+    through their sources (dependent_materialized_views)."""
     out: list[tuple[list[str], str, RollupSpec | JoinRollupSpec, dict]] = []
-
-    def walk(parent):
-        for ns in io.client.list_namespaces(parent):
-            for ident in io.client.list_tables(ns):
-                t_ns, t_name = list(ident["namespace"]), ident["name"]
-                md = io.client.load_table(t_ns, t_name)["metadata"]
-                raw = md.get("properties", {}).get(SPEC_PROPERTY)
-                if raw:
-                    out.append((t_ns, t_name, spec_from_json(raw), md))
-            walk(ns)
-
-    walk(None)
+    for ident in tables:
+        ns, name = list(ident["namespace"]), ident["name"]
+        md = io.client.load_table(ns, name)["metadata"]
+        raw = md.get("properties", {}).get(SPEC_PROPERTY)
+        if raw:
+            out.append((ns, name, spec_from_json(raw), md))
     return out
 
 
 def dependent_materialized_views(
-    io: SparkCatalogIO, namespace: list[str], name: str
-) -> list[tuple[list[str], str]]:
-    """Every table in the catalog whose stamped `ivm.spec` reads from
-    ``namespace.name`` (either side of a join view)."""
+    io: SparkCatalogIO, namespace: list[str], name: str, md: dict | None = None,
+) -> list[tuple[list[str], str, "RollupSpec | JoinRollupSpec", dict]]:
+    """The MVs that table ``namespace.name`` lists in `ivm.dependent.*`
+    and whose own ivm.spec reads it, as (namespace, name, spec, metadata):
+    one load of the table (none when its metadata `md` is given) and one
+    per listed MV. An entry whose MV is gone (404) or does not read this
+    table is skipped, so a stale entry is never served."""
+    if md is None:
+        md = io.client.load_table(namespace, name)["metadata"]
     qualified = ".".join([*namespace, name])
-    out: list[tuple[list[str], str]] = []
-    for t_ns, t_name, spec, _md in list_materialized_views(io):
-        if isinstance(spec, JoinRollupSpec):
-            srcs = {spec._qualified_left(), spec._qualified_right()}
-        else:
-            srcs = {spec._qualified_source()}
-        if qualified in srcs:
-            out.append((t_ns, t_name))
+    out: list[tuple[list[str], str, RollupSpec | JoinRollupSpec, dict]] = []
+    for key in sorted(md.get("properties", {})):
+        if not key.startswith(DEPENDENT_PREFIX):
+            continue
+        *mv_ns, mv_name = key[len(DEPENDENT_PREFIX):].split(".")
+        try:
+            mv_md = io.client.load_table(mv_ns, mv_name)["metadata"]
+        except CatalogHTTPError as exc:
+            if exc.status != 404:
+                raise
+            continue
+        raw = mv_md.get("properties", {}).get(SPEC_PROPERTY)
+        if raw is None:
+            continue
+        spec = spec_from_json(raw)
+        if qualified in {".".join([*ns, n]) for ns, n in _sources(spec)}:
+            out.append((mv_ns, mv_name, spec, mv_md))
     return out
+
+
+def refuse_rename(io: SparkCatalogIO, namespace: list[str], name: str,
+                  md: dict) -> None:
+    """Refuse ALTER TABLE ... RENAME TO on an MV or an MV's source: the
+    MV's spec names both, so REFRESH would 404 and the entry would dangle."""
+    deps = [".".join([*ns, n]) for ns, n, _s, _m
+            in dependent_materialized_views(io, namespace, name, md)]
+    if SPEC_PROPERTY in md.get("properties", {}) or deps:
+        what = f"read by {', '.join(deps)}" if deps else "a materialized view"
+        raise ValueError(
+            f"cannot rename {'.'.join([*namespace, name])!r}: it is {what} — "
+            "drop the materialized view, rename, then re-create it"
+        )
 
 
 def mv_watermark_state(io: SparkCatalogIO,
@@ -1435,21 +1501,13 @@ def mv_watermark_state(io: SparkCatalogIO,
     invalidated the view — the contents are not the view at ANY
     snapshot, and nothing may be served from them)."""
     try:
-        if isinstance(spec, JoinRollupSpec):
-            lw, rw = _join_watermarks(md, spec)
-            l_md = io.client.load_table(
-                spec.left_namespace, spec.left_name)["metadata"]
-            r_md = io.client.load_table(
-                spec.right_namespace, spec.right_name)["metadata"]
-            fresh = (l_md.get("current-snapshot-id") == lw
-                     and r_md.get("current-snapshot-id") == rw)
-        else:
-            wm = _current_watermark(md, spec)
-            src_md = io.client.load_table(
-                spec.source_namespace, spec.source_name)["metadata"]
-            fresh = src_md.get("current-snapshot-id") == wm
+        wms = _watermarks(md, spec)
     except ValueError:
         return "invalid"
+    fresh = all(
+        io.client.load_table(ns, n)["metadata"].get("current-snapshot-id") == wm
+        for (ns, n), wm in zip(_sources(spec), wms)
+    )
     return "fresh" if fresh else "stale"
 
 
@@ -1479,15 +1537,11 @@ def mv_staleness_lag_ms(io: SparkCatalogIO,
         return max(1, ts[cur] - ts[wm])
 
     try:
-        if isinstance(spec, JoinRollupSpec):
-            lw, rw = _join_watermarks(md, spec)
-            lags = [lag(spec.left_namespace, spec.left_name, lw),
-                    lag(spec.right_namespace, spec.right_name, rw)]
-            return None if None in lags else max(lags)
-        wm = _current_watermark(md, spec)
-        return lag(spec.source_namespace, spec.source_name, wm)
+        wms = _watermarks(md, spec)
     except ValueError:
         return None
+    lags = [lag(ns, n, wm) for (ns, n), wm in zip(_sources(spec), wms)]
+    return None if None in lags else max(lags)
 
 
 def rollup_topup_delta(io: SparkCatalogIO, spec: RollupSpec, md: dict,
@@ -1640,13 +1694,6 @@ def join_topup_delta(io: SparkCatalogIO, spec: "JoinRollupSpec", md: dict,
     )
 
 
-def mv_freshness(io: SparkCatalogIO, spec: "RollupSpec | JoinRollupSpec",
-                 md: dict) -> bool:
-    """True when the MV's stored watermark(s) equal the source(s)' CURRENT
-    snapshot (mv_watermark_state == 'fresh')."""
-    return mv_watermark_state(io, spec, md) == "fresh"
-
-
 def render_materialized_view_sql(spec: "RollupSpec | JoinRollupSpec") -> str:
     """The inverse of parse_materialized_view_sql — SHOW CREATE TABLE on a
     maintained MV renders CREATE MATERIALIZED VIEW DDL that re-parses to
@@ -1706,7 +1753,6 @@ def verify_materialized_view(io: SparkCatalogIO, namespace: list[str],
             lw = rw = None
             watermarked = False
         want = _aggregate_join_full(io, spec, lw, rw)
-        ndv_cols = list(spec.ndvs)
     else:
         try:
             wm = _current_watermark(md, spec)
@@ -1714,7 +1760,7 @@ def verify_materialized_view(io: SparkCatalogIO, namespace: list[str],
             wm = None
             watermarked = False
         want = _aggregate_full(io, spec, snapshot_id=wm)
-        ndv_cols = list(spec.ndvs)
+    ndv_cols = list(spec.ndvs)
     got = io.read_table(namespace, name)
     # An MV created by an older build stores its derived averages as
     # DOUBLE; align the recompute to the committed type so the value

@@ -1283,47 +1283,30 @@ def run_maintenance(
         report["compact_data_files"] = "noop" if r.get("noop") else "done"
     if refresh_mviews:
         from denali_spark.sources.ivm import (
+            _sources,
             dependent_materialized_views,
             refresh_materialized_view,
         )
 
-        # Transitive closure, refreshed in TOPOLOGICAL order: an MV built
+        # Transitive closure through each table's dependents entries (one
+        # load per node), refreshed in TOPOLOGICAL order: an MV built
         # over another MV (cascading rollups) must fold AFTER its parent —
         # including diamonds (a join MV over the base table AND a sibling
         # MV must not refresh off the sibling's stale state, which a
         # plain BFS order permits). A failed parent's descendants are
         # SKIPPED and reported: refreshing them would advance their
         # watermark over a parent state that never folded.
-        from denali_spark.sources.ivm import (
-            SPEC_PROPERTY,
-            JoinRollupSpec,
-            spec_from_json,
-        )
-
-        queue = list(dependent_materialized_views(io, namespace, name))
-        nodes: dict[str, tuple[list[str], str]] = {}
+        queue = dependent_materialized_views(io, namespace, name)
+        nodes: dict[str, tuple[list[str], str, set[str]]] = {}
         while queue:
-            d_ns, d_name = queue.pop(0)
+            d_ns, d_name, d_spec, d_md = queue.pop(0)
             key = ".".join([*d_ns, d_name])
             if key in nodes:
                 continue
-            nodes[key] = (d_ns, d_name)
-            queue.extend(dependent_materialized_views(io, d_ns, d_name))
-
-        def _parents(d_ns: list[str], d_name: str) -> set[str]:
-            md = io.client.load_table(d_ns, d_name)["metadata"]
-            raw = md.get("properties", {}).get(SPEC_PROPERTY)
-            if not raw:
-                return set()
-            mv_spec = spec_from_json(raw)
-            srcs = (
-                {mv_spec._qualified_left(), mv_spec._qualified_right()}
-                if isinstance(mv_spec, JoinRollupSpec)
-                else {mv_spec._qualified_source()}
-            )
-            return srcs & set(nodes)
-
-        parents_of = {k: _parents(*v) for k, v in nodes.items()}
+            srcs = {".".join([*ns, n]) for ns, n in _sources(d_spec)}
+            nodes[key] = (d_ns, d_name, srcs)
+            queue.extend(dependent_materialized_views(io, d_ns, d_name, d_md))
+        parents_of = {k: srcs & set(nodes) for k, (*_, srcs) in nodes.items()}
         order: list[str] = []
         remaining = set(nodes)
         while remaining:
@@ -1342,7 +1325,7 @@ def run_maintenance(
         refreshed, failed, skipped = 0, [], []
         broken: set[str] = set()
         for key in order:
-            d_ns, d_name = nodes[key]
+            d_ns, d_name, _srcs = nodes[key]
             if parents_of[key] & broken:
                 broken.add(key)
                 skipped.append(f"{key}: parent refresh failed")

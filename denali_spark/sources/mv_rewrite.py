@@ -94,18 +94,20 @@ import re
 
 from pyspark.sql import DataFrame, functions as F
 
+from denali_spark.catalog.client import CatalogHTTPError
 from denali_spark.sources.ivm import (
     COUNT_COL,
     JoinRollupSpec,
-    RollupSpec,
     _parse_agg_item,
-    list_materialized_views,
+    _sources,
+    dependent_materialized_views,
     mv_staleness_lag_ms,
     join_topup_delta,
     rollup_topup_delta,
     mv_watermark_state,
     parse_materialized_view_sql,
     refresh_materialized_view,
+    sources_label,
 )
 
 MODES = ("off", "fresh-only", "refresh", "stale-ok", "topup")
@@ -346,17 +348,12 @@ def _parse_query(select_sql: str):
 
 
 def _sources_match(q, m) -> bool:
-    if isinstance(q, JoinRollupSpec) != isinstance(m, JoinRollupSpec):
-        return False
-    if isinstance(q, JoinRollupSpec):
-        if (q._qualified_left() != m._qualified_left()
-                or q._qualified_right() != m._qualified_right()):
-            return False
-        # the MV's stored ON pairs are schema-resolved; the query's bare
-        # pairs may be positionally swapped — match orientation-insensitive
-        mset = {frozenset(p) for p in m.on}
-        return {frozenset(p) for p in q.on} == mset
-    return q._qualified_source() == m._qualified_source()
+    # the MV's stored ON pairs are schema-resolved; the query's bare pairs
+    # may be positionally swapped — match orientation-insensitive
+    def on(spec):
+        return {frozenset(p) for p in getattr(spec, "on", ())}
+
+    return sources_label(q) == sources_label(m) and on(q) == on(m)
 
 
 def _agg_lookup(m) -> dict[tuple[str, str], str]:
@@ -406,31 +403,22 @@ def _avg_builder(scol: str, ccol: str):
     return build
 
 
-def _candidate_mvs(io):
-    """The catalog's maintained MVs as (ns, name, spec, metadata). The
-    identity LIST is cached on the session (io._mv_listing_cache) so a
-    rollup-shaped SELECT against an MV-free catalog costs zero per-table
-    metadata loads after the first walk; the cached MVs' metadata is
-    reloaded fresh each time (specs and watermarks must be current).
-    CREATE/DROP MATERIALIZED VIEW through this session invalidate the
-    cache; io.invalidate_mv_cache() picks up another client's DDL."""
-    from denali_spark.sources.ivm import SPEC_PROPERTY, spec_from_json
-
-    cached = getattr(io, "_mv_listing_cache", None)
-    if cached is None:
-        mvs = list_materialized_views(io)
-        io._mv_listing_cache = [(ns, name) for ns, name, _s, _m in mvs]
-        return mvs
-    out = []
-    for ns, name in cached:
-        try:
-            md = io.client.load_table(ns, name)["metadata"]
-        except Exception:  # noqa: BLE001 — dropped since cached
-            continue
-        raw = md.get("properties", {}).get(SPEC_PROPERTY)
-        if raw:
-            out.append((ns, name, spec_from_json(raw), md))
-    return out
+def _candidate_mvs(io, q):
+    """The MVs that the query's source lists, as (ns, name, spec, metadata)
+    (dependent_materialized_views): one load of the source plus one per
+    listed MV, whatever the catalog's size, and another client's CREATE or
+    DROP shows at once. A join query loads only its left source, since a
+    matching join MV lists itself on both. A source that is not a catalog
+    table (a view, a metadata table, an unknown name) has none."""
+    ns, name = _sources(q)[0]
+    if not ns:
+        return []
+    try:
+        return dependent_materialized_views(io, ns, name)
+    except CatalogHTTPError as exc:
+        if exc.status != 404:
+            raise
+        return []
 
 
 def _mv_row_estimate(mv_md: dict) -> int:
@@ -489,7 +477,7 @@ def try_rewrite(io, query: str) -> DataFrame | None:
     # Freshness/refresh checks stay in phase 2 so a fresh-only miss (or a
     # failed refresh) on the cheapest falls through to the next-cheapest.
     matches = []
-    for mv_ns, mv_name, m, mv_md in _candidate_mvs(io):
+    for mv_ns, mv_name, m, mv_md in _candidate_mvs(io, q):
         if not _sources_match(q, m):
             continue
         if set(q.group_by) - set(m.group_by):

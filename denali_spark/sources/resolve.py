@@ -34,10 +34,9 @@ from denali_spark.sources.metadata_tables import KINDS, metadata_table
 
 MAX_VIEW_DEPTH = 10
 # plan nodes under which a replaced relation must not gain an `AS <bare>`
-# correlation name: it already has an alias, it is a `TABLE ns.t` query, or
-# a TABLESAMPLE clause follows the name (an alias there is a syntax error)
+# correlation name: it already has an alias, or it is a `TABLE ns.t` query
 _NO_ALIAS_PARENTS = frozenset(
-    (None, "SubqueryAlias", "Union", "Intersect", "Except", "Sample")
+    (None, "SubqueryAlias", "Union", "Intersect", "Except")
 )
 
 
@@ -46,7 +45,7 @@ def _seq(s) -> list:
 
 
 def _references(plan):
-    """(relation, time-travel node or None, parent node name or None, CTE
+    """(relation, time-travel node or None, parent node or None, CTE
     names in scope) for every UnresolvedRelation in a parsed plan:
     children, expression subqueries (innerChildren), CTE definitions and
     the relation a RelationTimeTravel holds as a field."""
@@ -64,12 +63,12 @@ def _references(plan):
             scope = ctes
             for d in _seq(node.cteRelations()):
                 name = d._1().lower()
-                walk(d._2(), kind, scope | {name} if node.allowRecursion() else scope)
+                walk(d._2(), node, scope | {name} if node.allowRecursion() else scope)
                 scope = scope | {name}
-            walk(node.child(), kind, scope)
+            walk(node.child(), node, scope)
         else:
             for child in _seq(node.children()) + _seq(node.innerChildren()):
-                walk(child, kind, ctes)
+                walk(child, node, ctes)
 
     walk(plan, None, frozenset())
     return out
@@ -188,12 +187,18 @@ def resolve_sql(
             views[key] = _temp_view(io, parts, depth, travel)
         if views[key] is None:
             continue
-        text = views[key]
-        if parent not in _NO_ALIAS_PARENTS:
-            # ANSI: an unaliased reference's correlation name is its bare
-            # table name (`FROM a.facts JOIN a.dims ON facts.k = dims.k`)
-            text += " AS `" + parts[-1].replace("`", "``") + "`"
-        edits[start] = (stop, text)
+        edits[start] = (stop, views[key])
+        # ANSI: an unaliased reference's correlation name is its bare table
+        # name (`FROM a.facts JOIN a.dims ON facts.k = dims.k`); it follows
+        # a TABLESAMPLE clause, which Spark parses as the parent node
+        alias = " AS `" + parts[-1].replace("`", "``") + "`"
+        kind = parent.nodeName() if parent is not None else None
+        if kind in ("Sample", "LocalLimit") and re.match(
+            r"TABLESAMPLE\b", query[_span(parent)[0]:], re.IGNORECASE
+        ):
+            edits[_span(parent)[1]] = (_span(parent)[1], alias)
+        elif kind not in _NO_ALIAS_PARENTS:
+            edits[start] = (stop, views[key] + alias)
     for start, (stop, text) in sorted(edits.items(), reverse=True):
         query = query[:start] + text + query[stop:]
     return io.spark.sql(query)

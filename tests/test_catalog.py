@@ -420,6 +420,21 @@ def test_keep_alive_connection_has_no_delayed_ack_stall(catalog):
     assert elapsed < 2.0, f"200 keep-alive loadTable calls took {elapsed:.2f}s"
 
 
+def test_stop_returns_without_waiting_out_the_poll(tmp_path):
+    """stop() must not wait out serve_forever's 0.5-s idle poll: each test
+    that uses a catalog fixture pays it once."""
+    import time
+
+    for i in range(3):
+        server = CatalogServer(make_state(str(tmp_path / f"wh{i}"))).start()
+        CatalogClient(server.uri).create_namespace(["s"])
+        time.sleep(0.05)  # let the serve loop go idle in its select
+        t0 = time.perf_counter()
+        server.stop()
+        elapsed = time.perf_counter() - t0
+        assert elapsed < 0.1, f"stop() took {elapsed:.3f}s"
+
+
 # --- views (fully implemented; reference stubs these) ---------------------
 
 

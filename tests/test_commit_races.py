@@ -240,6 +240,35 @@ def test_source_append_during_refresh_stays_watermark_pinned(spark, io_a, io_b):
     assert counts == {(k, 40) for k in range(5)}
 
 
+def test_concurrent_mv_creates_on_one_source_are_both_listed(spark, io_a, io_b):
+    """Two sessions create MVs over one source at once: B's whole CREATE
+    lands between A's build and A's stamp. Each MV lists itself on the
+    source under its own key, so neither entry is lost, and each session
+    is served from both MVs."""
+    _ivm_seed(spark, io_a, "f7")
+    real = io_a.client.commit_transaction
+
+    def hooked(changes):
+        io_a.client.commit_transaction = real
+        io_b.sql("CREATE MATERIALIZED VIEW race.f7_b AS "
+                 "SELECT id, COUNT(*) AS n_rows FROM race.f7 GROUP BY id")
+        return real(changes)
+
+    io_a.client.commit_transaction = hooked
+    io_a.sql("CREATE MATERIALIZED VIEW race.f7_a AS SELECT k, COUNT(*) AS "
+             "n_rows, SUM(CAST(amount AS DECIMAL(18,2))) AS amount_sum "
+             "FROM race.f7 GROUP BY k")
+    props = io_a.client.load_table(["race"], "f7")["metadata"]["properties"]
+    assert {"ivm.dependent.race.f7_a", "ivm.dependent.race.f7_b"} <= set(props)
+    for io in (io_a, io_b):
+        rows = io.sql("SELECT k, SUM(CAST(amount AS DECIMAL(18,2))) AS s "
+                      "FROM race.f7 GROUP BY k").collect()
+        assert io.last_mv_rewrite["view"] == "race.f7_a" and len(rows) == 5
+        rows = io.sql("SELECT id, COUNT(*) AS n FROM race.f7 GROUP BY id").collect()
+        assert io.last_mv_rewrite["view"] == "race.f7_b"
+        assert {(r.id, r.n) for r in rows} == {(i, 1) for i in range(100)}
+
+
 # --- r16: maintenance rewrites racing MoR deletes ---------------------------
 
 

@@ -730,6 +730,23 @@ def test_run_maintenance_refreshes_dependent_mviews(spark, io):
     assert io.sql("REFRESH MATERIALIZED VIEW ivm.mv_maint").collect()[0].kind == "noop"
 
 
+def test_rename_of_mv_or_its_source_is_refused(spark, io):
+    """REFRESH reads the source and writes the target that the MV's spec
+    names, so renaming either would strand the MV: both renames are
+    refused, and the source renames once the MV is dropped."""
+    _append(spark, io, 0, 50)
+    io.sql("CREATE MATERIALIZED VIEW ivm.mv_ren AS "
+           "SELECT k, COUNT(*) AS n_rows FROM ivm.facts GROUP BY k")
+    for name in ("ivm.mv_ren", "ivm.facts"):
+        with pytest.raises(ValueError, match="drop the materialized view"):
+            io.sql(f"ALTER TABLE {name} RENAME TO ivm.renamed")
+    assert io.sql("REFRESH MATERIALIZED VIEW ivm.mv_ren").collect()[0].kind \
+        == "noop"
+    io.sql("DROP MATERIALIZED VIEW ivm.mv_ren")
+    io.sql("ALTER TABLE ivm.facts RENAME TO ivm.renamed")
+    assert io.read_table(["ivm"], "renamed").count() == 50
+
+
 def test_show_create_table_renders_mv_ddl_that_reparses(spark, io):
     _append(spark, io, 0, 50)
     io.sql("CREATE MATERIALIZED VIEW ivm.mv_show AS "

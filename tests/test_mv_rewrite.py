@@ -290,30 +290,60 @@ def test_between_predicate_never_crashes(spark, io):
     assert rewritten == got
 
 
-def test_mv_listing_cache_invalidation(spark, io):
+def test_cross_session_mv_ddl_is_seen_at_once(spark, io):
     from denali_spark.sources import SparkCatalogIO
 
     _seed(spark, io)
     q = "SELECT k, COUNT(*) AS n FROM rw.facts GROUP BY k"
     io.sql(q)
-    assert io.last_mv_rewrite is not None  # cache now holds rw.mv
-    # a SECOND session creates a better-matching... actually drops ours
+    assert io.last_mv_rewrite is not None
+    # a SECOND session drops the MV: the next SELECT here falls back
+    # without error, and the source no longer lists the MV
     other = SparkCatalogIO(spark, io.client.uri)
     other.sql("DROP MATERIALIZED VIEW rw.mv")
-    # stale cache: the loop reloads each cached MV fresh, finds it gone,
-    # and falls back without error
     df = io.sql(q)
     assert io.last_mv_rewrite is None
     assert {(r.k, r.n) for r in df.collect()} == {(k, 40) for k in range(5)}
-    # cross-session CREATE becomes visible after explicit invalidation
+    props = io.client.load_table(["rw"], "facts")["metadata"]["properties"]
+    assert not any(key.startswith("ivm.dependent.") for key in props)
+    # a cross-session CREATE is served from on the very next SELECT
     other.sql("CREATE MATERIALIZED VIEW rw.mv2 AS "
               "SELECT k, COUNT(*) AS n_rows FROM rw.facts GROUP BY k")
     io.sql(q)
-    assert io.last_mv_rewrite is None  # cached listing predates mv2
-    io.invalidate_mv_cache()
-    io.sql(q)
     assert io.last_mv_rewrite is not None
     assert io.last_mv_rewrite["view"] == "rw.mv2"
+
+
+def test_first_rollup_select_requests_do_not_grow_with_catalog(spark, io):
+    """A fresh session's first rollup-shaped SELECT finds MVs through the
+    source's entries, not a catalog walk: it sends as many catalog
+    requests with 20 more one-table namespaces as without them."""
+    from denali_spark.sources import SparkCatalogIO
+
+    _seed(spark, io)
+    q = "SELECT k, COUNT(*) AS n FROM rw.facts GROUP BY k"
+    schema = {"type": "struct", "schema-id": 0, "fields": [
+        {"id": 1, "name": "id", "required": False, "type": "long"}]}
+
+    def first_select_requests():
+        fresh = SparkCatalogIO(spark, io.client.uri)
+        calls = []
+        request_h = fresh.client._request_h
+
+        def counting(*args, **kwargs):
+            calls.append(args[:2])
+            return request_h(*args, **kwargs)
+
+        fresh.client._request_h = counting
+        fresh.sql(q).collect()
+        assert fresh.last_mv_rewrite["view"] == "rw.mv"
+        return calls
+
+    before = first_select_requests()
+    for i in range(20):
+        io.client.create_namespace([f"other{i:02d}"])
+        io.client.create_table([f"other{i:02d}"], "t", schema)
+    assert first_select_requests() == before
 
 
 def test_left_join_query_never_served_from_inner_join_mv(spark, io):

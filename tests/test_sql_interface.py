@@ -1339,11 +1339,29 @@ def test_backticked_table_name_resolves(spark, io, orders):
     assert out[0]["n"] == 100
 
 
+def test_tablesample_keeps_the_correlation_name(spark, io, orders):
+    """An unaliased table under TABLESAMPLE is still addressable by its
+    bare name: the alias goes after the sample clause, not before it."""
+    rows = io.sql(
+        "SELECT orders.id FROM cte.orders TABLESAMPLE (100 PERCENT)"
+    ).collect()
+    assert sorted(r["id"] for r in rows) == list(range(100))
+    [r] = io.sql(
+        "SELECT COUNT(orders.id) AS n FROM cte.orders TABLESAMPLE (5 ROWS)"
+    ).collect()
+    assert r["n"] == 5
+    [r] = io.sql(
+        "SELECT COUNT(*) AS n FROM cte.orders TABLESAMPLE (100 PERCENT) "
+        "JOIN westeros.my_table ON orders.id = my_table.id"
+    ).collect()
+    assert r["n"] == 100
+
+
 def test_statement_requests_do_not_grow_with_catalog(spark, io, orders):
     """A SELECT looks up the names it uses, not the catalog: its request
     count is the same after 20 unrelated namespaces appear."""
     stmt = "SELECT COUNT(*) AS n FROM cte.orders"
-    io.sql(stmt).collect()  # the MV-rewrite pass lists MVs once per session
+    io.sql(stmt).collect()  # warm-up; MVs are found through the source
     calls = []
     request_h = io.client._request_h
 
