@@ -1,5 +1,9 @@
-"""Minimal Iceberg REST catalog client (stdlib urllib).
+"""Minimal Iceberg REST catalog client (stdlib http.client).
 
+Each calling thread keeps one persistent HTTP/1.1 connection per client,
+so a request costs no TCP set-up once the thread has made its first; a
+request whose connection broke is sent again only when that cannot apply
+it twice (see CatalogClient._request_h).
 Used by the test suite and by the Spark source/sink layer
 (denali_spark.sources) — the same role pyiceberg's RestCatalog plays against
 the reference in its tests (/root/reference/tests/pyiceberg/conftest.py).
@@ -7,10 +11,11 @@ the reference in its tests (/root/reference/tests/pyiceberg/conftest.py).
 
 from __future__ import annotations
 
+import http.client
 import json
-import urllib.error
-import urllib.request
-from urllib.parse import quote
+import select
+import threading
+from urllib.parse import quote, urlencode, urlsplit
 
 UNIT_SEP = "\x1f"
 
@@ -29,6 +34,27 @@ class CatalogHTTPError(Exception):
         super().__init__(f"HTTP {status}: {msg}")
 
 
+def _dropped(sock) -> bool:
+    """An idle keep-alive socket turns readable only when the server has
+    closed it (EOF) or reset it, as urllib3's is_connection_dropped
+    checks."""
+    poller = select.poll()
+    poller.register(sock, select.POLLIN)
+    return bool(poller.poll(0))
+
+
+class _Connection(http.client.HTTPConnection):
+    """A thread's connection; its socket closes when the connection is
+    dropped, with its thread or with its client."""
+
+    def __del__(self):
+        self.close()
+
+
+class _TLSConnection(http.client.HTTPSConnection):
+    __del__ = _Connection.__del__
+
+
 class CatalogClient:
     def __init__(self, uri: str, token: str | None = None):
         self.uri = uri.rstrip("/")
@@ -38,6 +64,13 @@ class CatalogClient:
         # every commit, so a 304 hit is guaranteed-fresh; at scale this
         # saves re-shipping a multi-MB metadata document per poll.
         self._etag_cache: dict[str, tuple[str, dict]] = {}
+        parts = urlsplit(self.uri)
+        self._conn_args = (
+            _TLSConnection if parts.scheme == "https" else _Connection,
+            parts.hostname, parts.port,
+        )
+        self._prefix = parts.path
+        self._local = threading.local()  # .conn: this thread's connection
 
     # --- plumbing ---------------------------------------------------------
 
@@ -46,56 +79,73 @@ class CatalogClient:
         return self._request_h(method, path, body, query)[:2]
 
     def _request_h(
-        self, method: str, path: str, body: dict | None = None,
+        self, method: str, path: str, body: dict | bytes | None = None,
         query: str = "", extra_headers: dict | None = None,
     ) -> tuple[int, dict, dict]:
-        """Like _request but also returns response headers, and treats 304
-        Not Modified as a success (urllib raises HTTPError on it)."""
-        url = f"{self.uri}{path}" + (f"?{query}" if query else "")
-        data = json.dumps(body).encode() if body is not None else None
+        """Send one request on the calling thread's persistent connection
+        and return (status, payload, headers); 304 Not Modified is
+        returned, any other status >= 400 raises CatalogHTTPError. A body
+        is sent as JSON, or as it is when it is bytes (with the Content-Type
+        given in extra_headers).
+
+        An idle connection the server has closed is replaced before use.
+        A request is replayed once on a fresh connection if its send
+        failed, or, for GET and HEAD only, if a reused connection gave no
+        status line: a POST or DELETE the server may have received in full
+        is never sent twice."""
+        target = f"{self._prefix}{path}" + (f"?{query}" if query else "")
+        data = body if body is None or isinstance(body, bytes) else json.dumps(body).encode()
         headers = {"Content-Type": "application/json"} if data else {}
         if self.token:
             headers["Authorization"] = f"Bearer {self.token}"
         headers.update(extra_headers or {})
-        req = urllib.request.Request(url, data=data, method=method, headers=headers)
-        try:
-            with urllib.request.urlopen(req) as resp:
+        conn = getattr(self._local, "conn", None)
+        if conn is None:
+            cls, host, port = self._conn_args
+            conn = self._local.conn = cls(host, port)
+        for attempt in (0, 1):
+            if conn.sock is not None and _dropped(conn.sock):
+                conn.close()
+            reused = conn.sock is not None
+            try:
+                conn.request(method, target, data, headers)
+            except OSError:
+                conn.close()
+                if attempt:
+                    raise
+                continue
+            try:
+                resp = conn.getresponse()
                 raw = resp.read()
-                return (
-                    resp.status,
-                    json.loads(raw) if raw else {},
-                    dict(resp.headers),
-                )
-        except urllib.error.HTTPError as exc:
-            if exc.code == 304:
-                return 304, {}, dict(exc.headers)
-            raw = exc.read()
-            payload = json.loads(raw) if raw else {}
-            raise CatalogHTTPError(exc.code, payload) from None
+                break
+            except ConnectionError:
+                conn.close()
+                # a replayed read answers the same; a replayed commit
+                # could apply twice
+                if attempt or not reused or method not in ("GET", "HEAD"):
+                    raise
+            except BaseException:
+                conn.close()
+                raise
+        payload = json.loads(raw) if raw else {}
+        if resp.status >= 400:
+            raise CatalogHTTPError(resp.status, payload)
+        return resp.status, payload, dict(resp.headers)
 
     def authenticate(self, client_id: str, client_secret: str,
                      scope: str = "catalog") -> str:
         """RFC 6749 client_credentials exchange at /v1/oauth/tokens; the
         returned bearer token is remembered for every later request."""
-        from urllib.parse import urlencode
-
         data = urlencode({
             "grant_type": "client_credentials",
             "client_id": client_id,
             "client_secret": client_secret,
             "scope": scope,
         }).encode()
-        req = urllib.request.Request(
-            f"{self.uri}/v1/oauth/tokens", data=data, method="POST",
-            headers={"Content-Type": "application/x-www-form-urlencoded"},
-        )
-        try:
-            with urllib.request.urlopen(req) as resp:
-                payload = json.loads(resp.read())
-        except urllib.error.HTTPError as exc:
-            raise CatalogHTTPError(
-                exc.code, json.loads(exc.read() or b"{}")
-            ) from None
+        payload = self._request_h(
+            "POST", "/v1/oauth/tokens", data,
+            extra_headers={"Content-Type": "application/x-www-form-urlencoded"},
+        )[1]
         self.token = payload["access_token"]
         return self.token
 
@@ -126,8 +176,6 @@ class CatalogClient:
             parts = [query] if query else []
             parts.append(f"pageSize={page_size}")
             if token:
-                from urllib.parse import quote
-
                 parts.append(f"pageToken={quote(token)}")
             payload = self._request("GET", path, query="&".join(parts))[1]
             out.extend(payload[key])

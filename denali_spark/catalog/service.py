@@ -1095,13 +1095,43 @@ class _Handler(BaseHTTPRequestHandler):
         self._dispatch("HEAD")
 
 
+class _Server(ThreadingHTTPServer):
+    """Thread-per-connection server that closes its open connections when
+    it closes: a handler thread would otherwise go on answering a client's
+    kept-alive connection after the server has stopped."""
+
+    def __init__(self, *args):
+        self._connections: set[socket.socket] = set()
+        self._connections_lock = threading.Lock()
+        super().__init__(*args)
+
+    def process_request(self, request, client_address):
+        with self._connections_lock:
+            self._connections.add(request)
+        super().process_request(request, client_address)
+
+    def shutdown_request(self, request):
+        with self._connections_lock:
+            self._connections.discard(request)
+        super().shutdown_request(request)
+
+    def server_close(self):
+        super().server_close()
+        with self._connections_lock:
+            open_connections = list(self._connections)
+        for conn in open_connections:
+            # wakes the handler blocked reading the next request with EOF
+            with contextlib.suppress(OSError):
+                conn.shutdown(socket.SHUT_RDWR)
+
+
 class CatalogServer:
     """Threaded HTTP server wrapper (RunServer, main.go:34-58; port 0 =
     random free port, main.go:50-51)."""
 
     def __init__(self, state: State, port: int = 0, host: str = "127.0.0.1"):
         handler = type("BoundHandler", (_Handler,), {"state": state})
-        self.httpd = ThreadingHTTPServer((host, port), handler)
+        self.httpd = _Server((host, port), handler)
         self.state = state
         self._thread: threading.Thread | None = None
 

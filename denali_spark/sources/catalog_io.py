@@ -3136,9 +3136,6 @@ class SparkCatalogIO:
 
         return read_manifest_list(path)
 
-    def _manifest_files(self, manifest_list_location: str) -> list[str]:
-        return [e["path"] for e in self._manifest_entries(manifest_list_location)]
-
     def _empty_df(self, md: dict) -> DataFrame:
         from pyspark.sql.types import StructType
 

@@ -33,10 +33,11 @@ from denali_spark.catalog.client import CatalogHTTPError
 from denali_spark.sources.metadata_tables import KINDS, metadata_table
 
 MAX_VIEW_DEPTH = 10
-# plan nodes under which a replaced relation must not gain an `AS <bare>`
-# correlation name: it already has an alias, or it is a `TABLE ns.t` query
-_NO_ALIAS_PARENTS = frozenset(
-    (None, "SubqueryAlias", "Union", "Intersect", "Except")
+# text that ends in the TABLE keyword, comments allowed after it: the
+# relation that follows is the operand of a `TABLE ns.t` query, where an
+# `AS <bare>` correlation name is a syntax error
+_TABLE_QUERY = re.compile(
+    r"\bTABLE(?:\s|/\*(?:[^*]|\*(?!/))*\*/|--[^\n]*\n)*$", re.IGNORECASE
 )
 
 
@@ -197,7 +198,7 @@ def resolve_sql(
             r"TABLESAMPLE\b", query[_span(parent)[0]:], re.IGNORECASE
         ):
             edits[_span(parent)[1]] = (_span(parent)[1], alias)
-        elif kind not in _NO_ALIAS_PARENTS:
+        elif kind != "SubqueryAlias" and not _TABLE_QUERY.search(query, 0, start):
             edits[start] = (stop, views[key] + alias)
     for start, (stop, text) in sorted(edits.items(), reverse=True):
         query = query[:start] + text + query[stop:]

@@ -9,6 +9,7 @@ surface the reference left unimplemented.
 
 from __future__ import annotations
 
+import sys
 import threading
 
 import pytest
@@ -433,6 +434,153 @@ def test_stop_returns_without_waiting_out_the_poll(tmp_path):
         server.stop()
         elapsed = time.perf_counter() - t0
         assert elapsed < 0.1, f"stop() took {elapsed:.3f}s"
+
+
+def test_stop_closes_kept_alive_connections(tmp_path):
+    """A stopped server must not go on answering a client's kept-alive
+    connection (pyiceberg's and Java's REST clients hold one)."""
+    import http.client
+    from urllib.parse import urlparse
+
+    server = CatalogServer(make_state(str(tmp_path / "wh"))).start()
+    uri = urlparse(server.uri)
+    conn = http.client.HTTPConnection(uri.hostname, uri.port, timeout=10)
+    try:
+        conn.request("GET", "/v1/namespaces")
+        resp = conn.getresponse()
+        resp.read()
+        assert resp.status == 200
+        server.stop()
+        with pytest.raises((OSError, http.client.HTTPException)):
+            conn.request("GET", "/v1/namespaces")
+            conn.getresponse().read()
+    finally:
+        conn.close()
+
+
+# --- client transport: one persistent connection per thread ----------------
+
+
+@pytest.fixture()
+def client_ports(monkeypatch):
+    """Client port of every request the server handles."""
+    from denali_spark.catalog import service
+
+    ports = []
+    dispatch = service._Handler._dispatch
+
+    def recording(self, method):
+        ports.append(self.client_address[1])
+        return dispatch(self, method)
+
+    monkeypatch.setattr(service._Handler, "_dispatch", recording)
+    return ports
+
+
+def test_client_thread_reuses_one_connection(catalog, client_ports):
+    catalog.create_namespace(["conn"])
+    catalog.create_table(["conn"], "t", SCHEMA_ID_NAME)
+    for _ in range(200):
+        catalog.load_table(["conn"], "t")
+    assert len(client_ports) == 202
+    assert len(set(client_ports)) == 1
+
+
+def test_client_threads_get_their_own_responses(catalog, client_ports):
+    """Threads sharing one client each hold their own connection, so no
+    thread ever reads a response meant for another."""
+    catalog.create_namespace(["mt"])
+    uuids = {
+        i: catalog.create_table(["mt"], f"t{i}", SCHEMA_ID_NAME)["metadata"]["table-uuid"]
+        for i in range(4)
+    }
+    client_ports.clear()
+    got = {i: [] for i in uuids}
+
+    def loads(i):
+        for _ in range(200):
+            payload = catalog._request("GET", f"/v1/namespaces/mt/tables/t{i}")[1]
+            got[i].append(payload["metadata"]["table-uuid"])
+
+    threads = [threading.Thread(target=loads, args=(i,)) for i in uuids]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads mid-request
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    for i, uuid in uuids.items():
+        assert got[i] == [uuid] * 200
+    assert len(set(client_ports)) == 4
+
+
+def test_client_survives_server_restart(tmp_path):
+    """A restart closes the client's idle connection; the next read and
+    the next commit go out on a fresh one."""
+    wh, db = str(tmp_path / "wh"), str(tmp_path / "catalog.db")
+    server = CatalogServer(make_state(wh, db)).start()
+    port = server.port
+    client = CatalogClient(server.uri)
+    client.create_namespace(["rs"])
+    client.create_table(["rs"], "t", SCHEMA_ID_NAME)
+    server.stop()
+    server = CatalogServer(make_state(wh, db), port=port).start()
+    try:
+        assert client.load_table(["rs"], "t")["metadata"]["properties"] == {}
+        out = client.commit_table(
+            ["rs"], "t", [],
+            [{"action": "set-properties", "updates": {"after": "restart"}}],
+        )
+        assert out["metadata"]["properties"] == {"after": "restart"}
+    finally:
+        server.stop()
+
+
+def test_only_reads_are_replayed_after_a_lost_response(catalog, monkeypatch):
+    """When the server drops a reused connection instead of answering, a
+    GET is sent again, and a commit the server received in full is not:
+    the error surfaces and the table advanced exactly once."""
+    import socket
+
+    from denali_spark.catalog import service
+
+    catalog.create_namespace(["lost"])
+    created = catalog.create_table(["lost"], "t", SCHEMA_ID_NAME)["metadata"]
+    path = "/v1/namespaces/lost/tables/t"
+    seen, drop = [], {"GET", "POST"}
+    send = service._Handler._send
+
+    def dropping(self, *args, **kwargs):
+        if self.path == path:
+            seen.append(self.command)
+            if self.command in drop:
+                drop.discard(self.command)
+                self.close_connection = True
+                self.connection.shutdown(socket.SHUT_RDWR)
+                return None
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(service._Handler, "_send", dropping)
+    loaded = catalog._request("GET", path)[1]["metadata"]
+    assert loaded["table-uuid"] == created["table-uuid"]
+    assert seen == ["GET", "GET"]
+    snap = {
+        "snapshot-id": 7, "sequence-number": created["last-sequence-number"] + 1,
+        "timestamp-ms": 1, "manifest-list": "x.avro",
+        "summary": {"operation": "append"}, "schema-id": 0,
+    }
+    with pytest.raises(ConnectionError):
+        catalog.commit_table(
+            ["lost"], "t", [], [{"action": "add-snapshot", "snapshot": snap}]
+        )
+    assert seen == ["GET", "GET", "POST"]
+    md = catalog.load_table(["lost"], "t")["metadata"]
+    assert md["last-sequence-number"] == created["last-sequence-number"] + 1
+    assert [s["snapshot-id"] for s in md["snapshots"]] == [7]
 
 
 # --- views (fully implemented; reference stubs these) ---------------------

@@ -1357,6 +1357,20 @@ def test_tablesample_keeps_the_correlation_name(spark, io, orders):
     assert r["n"] == 100
 
 
+def test_table_query_with_limit_or_order_by(spark, io, orders):
+    """The operand of a TABLE query takes no correlation name, whatever
+    clause follows it."""
+    assert io.sql("TABLE cte.orders LIMIT 2").count() == 2
+    ordered = io.sql("TABLE cte.orders ORDER BY id DESC").collect()
+    assert [r["id"] for r in ordered] == list(range(99, -1, -1))
+    [r] = io.sql(
+        "SELECT COUNT(*) AS n FROM (TABLE /* c */ cte.orders OFFSET 90) tail"
+    ).collect()
+    assert r["n"] == 10
+    [r] = io.sql("WITH c AS (TABLE cte.orders) SELECT COUNT(*) AS n FROM c").collect()
+    assert r["n"] == 100
+
+
 def test_statement_requests_do_not_grow_with_catalog(spark, io, orders):
     """A SELECT looks up the names it uses, not the catalog: its request
     count is the same after 20 unrelated namespaces appear."""
