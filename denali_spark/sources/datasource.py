@@ -438,11 +438,19 @@ class _DenaliStreamReader(DataSourceStreamReader):
         # behind a restart checkpoint and wedge the stream (the lineage
         # check would fail every trigger). Steady-state triggers cap.
         self._last: int | None = None
+        self._client: CatalogClient | None = None
+
+    def __getstate__(self):
+        # the client's per-thread connections do not pickle; a copy
+        # shipped for read() builds its own if it ever needs one
+        return {**self.__dict__, "_client": None}
 
     def _md(self):
-        return CatalogClient(self._uri).load_table(self._ns, self._table)[
-            "metadata"
-        ]
+        # one client per reader: every trigger reuses its kept-alive
+        # connection and its ETag, so an unchanged table answers 304
+        if self._client is None:
+            self._client = CatalogClient(self._uri)
+        return self._client.load_table(self._ns, self._table)["metadata"]
 
     def initialOffset(self) -> dict:
         return {"snapshot_id": self._initial}

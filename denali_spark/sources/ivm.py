@@ -402,6 +402,8 @@ def refresh_rollup(io: SparkCatalogIO, spec: RollupSpec) -> dict:
     src_snap = src_md.get("current-snapshot-id")
     if src_snap == watermark:
         return {"noop": True, "source_snapshot_id": watermark}
+    if _replaced_since(src_md, watermark):
+        return create_rollup(io, spec)
     _require_live_watermark(src_md, watermark, spec._qualified_source())
 
     changes = read_changes(
@@ -519,6 +521,19 @@ def refresh_rollup(io: SparkCatalogIO, spec: RollupSpec) -> dict:
     return res
 
 
+def _replaced_since(src_md: dict, watermark: int) -> bool:
+    """Whether a REPLACE TABLE commit (summary replace=true) lies between
+    `watermark` and the source's current snapshot. A replace gives every
+    field a new id, so no changelog spans it: the view is rebuilt."""
+    by_id = {s["snapshot-id"]: s for s in src_md.get("snapshots", [])}
+    cur = src_md.get("current-snapshot-id")
+    while cur is not None and cur != watermark and cur in by_id:
+        if by_id[cur].get("summary", {}).get("replace") == "true":
+            return True
+        cur = by_id[cur].get("parent-snapshot-id")
+    return False
+
+
 def _require_live_watermark(src_md: dict, watermark: int, qualified: str) -> None:
     """Incremental refresh derives the changelog from the watermark
     snapshot forward; if snapshot expiry trimmed the source's history past
@@ -533,6 +548,12 @@ def _require_live_watermark(src_md: dict, watermark: int, qualified: str) -> Non
             f"({watermark}) — the incremental delta is underivable; rebuild "
             "with create_rollup/create_join_rollup (and refresh before "
             "expiring source snapshots, as run_maintenance does)"
+        )
+    if _replaced_since(src_md, watermark):
+        raise ValueError(
+            f"{qualified!r} was replaced after the rollup watermark "
+            f"({watermark}) — no changelog spans a REPLACE TABLE; REFRESH "
+            "rebuilds the view"
         )
 
 
@@ -991,6 +1012,8 @@ def refresh_join_rollup(io: SparkCatalogIO, spec: JoinRollupSpec) -> dict:
     if l_cur == lw and r_cur == rw:
         return {"noop": True, "left_snapshot_id": lw, "right_snapshot_id": rw}
 
+    if _replaced_since(l_md, lw) or _replaced_since(r_md, rw):
+        return create_join_rollup(io, spec)
     keys = list(spec.group_by)
     w = F.col(WEIGHT_COL)
     terms = []
@@ -1176,7 +1199,7 @@ def parse_materialized_view_sql(
     """
     import re
 
-    from denali_spark.sources.catalog_io import (
+    from denali_spark.sources.sql_frontend import (
         _find_top_level,
         _split_top_level_commas,
     )

@@ -138,7 +138,7 @@ def _conjuncts(where: str) -> list[str] | None:
     `A OR B AND C` on AND would misparse) or a top-level BETWEEN (whose
     own AND is part of the predicate — splitting `k BETWEEN 1 AND 5`
     would yield invalid fragments)."""
-    from denali_spark.sources.catalog_io import _find_top_level
+    from denali_spark.sources.sql_frontend import _find_top_level
 
     if (_find_top_level(where, "OR") >= 0
             or _find_top_level(where, "BETWEEN") >= 0):
@@ -265,7 +265,7 @@ def _parse_query(select_sql: str):
     aggregate may wear an outer CAST (the registry's exactness idiom
     `CAST(SUM(DECIMAL) AS DOUBLE)`) — the final cast-to-base-schema step
     reapplies the exact same conversion to the rewritten plan."""
-    from denali_spark.sources.catalog_io import (
+    from denali_spark.sources.sql_frontend import (
         _find_top_level,
         _split_top_level_commas,
     )
@@ -403,22 +403,26 @@ def _avg_builder(scol: str, ccol: str):
     return build
 
 
-def _candidate_mvs(io, q):
+def _candidate_mvs(io, q, tables: dict):
     """The MVs that the query's source lists, as (ns, name, spec, metadata)
     (dependent_materialized_views): one load of the source plus one per
     listed MV, whatever the catalog's size, and another client's CREATE or
-    DROP shows at once. A join query loads only its left source, since a
-    matching join MV lists itself on both. A source that is not a catalog
-    table (a view, a metadata table, an unknown name) has none."""
+    DROP shows at once. The source's metadata goes into `tables`, so the
+    base path reads it without loading it again. A join query loads only
+    its left source, since a matching join MV lists itself on both. A
+    source that is not a catalog table (a view, a metadata table, an
+    unknown name) has none."""
     ns, name = _sources(q)[0]
     if not ns:
         return []
     try:
-        return dependent_materialized_views(io, ns, name)
+        md = io.client.load_table(ns, name)["metadata"]
     except CatalogHTTPError as exc:
         if exc.status != 404:
             raise
         return []
+    tables[(*ns, name)] = md
+    return dependent_materialized_views(io, ns, name, md=md)
 
 
 def _mv_row_estimate(mv_md: dict) -> int:
@@ -438,11 +442,13 @@ def _mv_row_estimate(mv_md: dict) -> int:
         return 1 << 62
 
 
-def try_rewrite(io, query: str) -> DataFrame | None:
+def try_rewrite(io, query: str, base, tables: dict) -> DataFrame | None:
     """Attempt to answer `query` from a maintained MV. Returns the
     rewritten DataFrame (cast to the base plan's schema) or None to fall
     back; sets io.last_mv_rewrite either way so callers and tests can see
-    what happened."""
+    what happened. `base()` is the un-rewritten query, built from the
+    statement's parsed plan; `tables` collects the table metadata loaded
+    here, for `base` to reuse."""
     io.last_mv_rewrite = None
     mode = getattr(io, "mv_rewrite", "fresh-only")
     if mode not in MODES:
@@ -477,7 +483,7 @@ def try_rewrite(io, query: str) -> DataFrame | None:
     # Freshness/refresh checks stay in phase 2 so a fresh-only miss (or a
     # failed refresh) on the cheapest falls through to the next-cheapest.
     matches = []
-    for mv_ns, mv_name, m, mv_md in _candidate_mvs(io, q):
+    for mv_ns, mv_name, m, mv_md in _candidate_mvs(io, q, tables):
         if not _sources_match(q, m):
             continue
         if set(q.group_by) - set(m.group_by):
@@ -743,11 +749,11 @@ def try_rewrite(io, query: str) -> DataFrame | None:
                 out = out.drop(*[h[0] for h in hidden])
         # analyze (never execute) the base plan to pin the rewritten
         # result to the exact types the un-rewritten query would carry
-        base = io.sql(query, _depth=1)
-        if set(base.columns) != set(out.columns):
+        base_df = base()
+        if set(base_df.columns) != set(out.columns):
             continue
         out = out.select(
-            *[F.col(f.name).cast(f.dataType) for f in base.schema.fields]
+            *[F.col(f.name).cast(f.dataType) for f in base_df.schema.fields]
         )
         if order_items is not None:
             out = out.orderBy(*[

@@ -1,7 +1,8 @@
 """Name resolution for `SparkCatalogIO.sql`: which catalog tables and views
 a statement names, and the statement text Spark runs in their place.
 
-The statement is parsed once with the session's own SQL parser. Every
+The SQL front end (sources/sql_frontend.py) parses the statement once and
+hands its plan here; only a view body is parsed here. Every
 `UnresolvedRelation` with two or more name parts is looked up once in the
 catalog (loadTable, then loadView on a 404; `ns.t.<kind>` for a
 `metadata_tables.KINDS` kind is a metadata table when `ns.t` is a table),
@@ -103,9 +104,10 @@ def _time_travel(tt, clause: str) -> tuple[int | None, str | None, int | None]:
     return None, None, int(dt.timestamp() * 1000)
 
 
-def _load(io, parts, depth, snapshot_id, ref, as_of_ms) -> DataFrame | None:
-    """One catalog lookup of `parts` as a metadata table, table or view;
-    None when the catalog has none of them."""
+def _load(io, parts, depth, snapshot_id, ref, as_of_ms, md=None) -> DataFrame | None:
+    """One catalog lookup of `parts` as a metadata table, table or view
+    (none for a table whose metadata `md` is given); None when the catalog
+    has none of them."""
     ns, name = parts[:-1], parts[-1]
     if name in KINDS and len(parts) >= 3:
         try:
@@ -124,7 +126,8 @@ def _load(io, parts, depth, snapshot_id, ref, as_of_ms) -> DataFrame | None:
                 raise
     try:
         return io.read_table(
-            ns, name, snapshot_id=snapshot_id, ref=ref, as_of_ms=as_of_ms
+            ns, name, snapshot_id=snapshot_id, ref=ref, as_of_ms=as_of_ms,
+            metadata=md,
         )
     except CatalogHTTPError as exc:
         if exc.status != 404:
@@ -144,11 +147,12 @@ def _load(io, parts, depth, snapshot_id, ref, as_of_ms) -> DataFrame | None:
     return io._view_df(md, ns, name, depth, version_id=snapshot_id, as_of_ms=as_of_ms)
 
 
-def _temp_view(io, parts, depth, travel) -> str | None:
+def _temp_view(io, parts, depth, travel, tables) -> str | None:
     """Load `parts`, as written and then lower-cased, into a temp view and
-    return its name; None when the catalog has no such object."""
+    return its name; None when the catalog has no such object. `tables`
+    holds table metadata already loaded for this statement."""
     for cand in dict.fromkeys((tuple(parts), tuple(p.lower() for p in parts))):
-        df = _load(io, list(cand), depth, *travel)
+        df = _load(io, list(cand), depth, *travel, md=tables.get(cand))
         if df is not None:
             key = "|".join(map(str, (*parts, *travel)))
             view = "__denali_" + hashlib.md5(key.encode()).hexdigest()[:10]
@@ -158,19 +162,28 @@ def _temp_view(io, parts, depth, travel) -> str | None:
 
 
 def resolve_sql(
-    io, query: str, depth: int = 0, default_ns: list[str] | None = None
+    io, query: str, plan=None, depth: int = 0, default_ns: list[str] | None = None,
+    keep: list[tuple[int, int]] | None = None, tables: dict | None = None,
 ) -> DataFrame:
     """Run `query` on `io.spark` with its catalog table and view references
-    replaced by temp views (see the module docstring). `default_ns` is set
-    for view bodies and qualifies their single-part names. A statement
-    that does not parse goes to spark.sql unchanged, which raises Spark's
-    own ParseException."""
+    replaced by temp views (see the module docstring). `plan` is the
+    statement's parsed plan, or the node of it to resolve; without one the
+    text is parsed here (a view body), and a text that does not parse goes
+    to spark.sql unchanged, which raises Spark's own ParseException. `keep`
+    lists the spans of `query` that make up the text to run (all of it by
+    default); edits take their offsets from the whole statement. `tables`
+    maps name parts to table metadata this statement already loaded.
+    `default_ns` is set for view bodies and qualifies their single-part
+    names."""
     if depth > MAX_VIEW_DEPTH:
         raise ValueError(f"view resolution exceeded depth {MAX_VIEW_DEPTH} (cycle?)")
-    try:
-        plan = io.spark._jsparkSession.sessionState().sqlParser().parsePlan(query)
-    except ParseException:
-        return io.spark.sql(query)
+    if plan is None:
+        from denali_spark.sources import sql_frontend
+
+        try:
+            plan = sql_frontend.parse_plan(io.spark, query)
+        except ParseException:
+            return io.spark.sql(query)
     views: dict[tuple, str | None] = {}
     edits: dict[int, tuple[int, str]] = {}  # span start -> (stop, text)
     for rel, tt, parent, ctes in _references(plan):
@@ -185,7 +198,7 @@ def resolve_sql(
         travel = _time_travel(tt, query[start:stop])
         key = (*parts, *travel)
         if key not in views:
-            views[key] = _temp_view(io, parts, depth, travel)
+            views[key] = _temp_view(io, parts, depth, travel, tables or {})
         if views[key] is None:
             continue
         edits[start] = (stop, views[key])
@@ -200,6 +213,12 @@ def resolve_sql(
             edits[_span(parent)[1]] = (_span(parent)[1], alias)
         elif kind != "SubqueryAlias" and not _TABLE_QUERY.search(query, 0, start):
             edits[start] = (stop, views[key] + alias)
-    for start, (stop, text) in sorted(edits.items(), reverse=True):
-        query = query[:start] + text + query[stop:]
-    return io.spark.sql(query)
+    out = []
+    for a, b in keep or [(0, len(query))]:
+        pos = a
+        for start in sorted(e for e in edits if a <= e <= b):
+            stop, text = edits[start]
+            out += [query[pos:start], text]
+            pos = stop
+        out.append(query[pos:b])
+    return io.spark.sql("".join(out))

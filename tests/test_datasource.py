@@ -410,3 +410,31 @@ def test_batch_read_row_ids(spark, io):
         for r in io.read_table(ns, "rid", with_row_ids=True).collect()
     }
     assert got == rec
+
+
+def test_stream_reader_keeps_one_catalog_client(spark, io, monkeypatch):
+    """Offset polling reuses one client: every trigger arrives on the same
+    kept-alive connection and an unchanged table is answered 304."""
+    import pickle
+
+    from denali_spark.catalog import service
+    from denali_spark.sources.datasource import _DenaliStreamReader
+
+    _append(spark, io, ["dsrc"], "poll", 0, 4)
+    md = io.client.load_table(["dsrc"], "poll")["metadata"]
+    reader = _DenaliStreamReader(
+        {"namespace": "dsrc", "table": "poll", "uri": io.client.uri}, md
+    )
+    seen = []
+    send = service._Handler._send
+
+    def recording(self, status, *args, **kwargs):
+        seen.append((self.client_address[1], status))
+        return send(self, status, *args, **kwargs)
+
+    monkeypatch.setattr(service._Handler, "_send", recording)
+    offsets = [reader.latestOffset() for _ in range(5)]
+    assert offsets == [{"snapshot_id": md["current-snapshot-id"]}] * 5
+    assert len(seen) == 5 and len({port for port, _ in seen}) == 1
+    assert sum(status == 304 for _, status in seen) >= 4
+    assert pickle.loads(pickle.dumps(reader))._client is None

@@ -1573,3 +1573,24 @@ def test_run_maintenance_protects_programmatic_rollups(spark, io):
     names = {r.mviewName
              for r in io.sql("SHOW MATERIALIZED VIEWS IN ivm").collect()}
     assert "facts_by_k" in names
+
+
+def test_create_or_replace_of_a_source_keeps_its_mv_entry(spark, io):
+    """CREATE OR REPLACE TABLE of an MV's source keeps the source's
+    `ivm.dependent.*` entry (replace_table keeps table properties), so the
+    MV is still found through its source. The replace gives every field a
+    new id, so no changelog spans it: REFRESH rebuilds the view."""
+    from denali_spark.sources.ivm import DEPENDENT_PREFIX
+
+    _append(spark, io, 0, 20)
+    io.sql(
+        "CREATE MATERIALIZED VIEW ivm.mv_rep AS "
+        "SELECT k, COUNT(*) AS n_rows FROM ivm.facts GROUP BY k"
+    )
+    io.sql("CREATE OR REPLACE TABLE ivm.facts AS SELECT * FROM ivm.facts WHERE id < 10")
+    props = io.client.load_table(["ivm"], "facts")["metadata"]["properties"]
+    assert DEPENDENT_PREFIX + "ivm.mv_rep" in props
+    assert io.sql("REFRESH MATERIALIZED VIEW ivm.mv_rep").collect()[0].kind == "full"
+    got = {(r.k, r.n_rows) for r in io.sql("SELECT k, n_rows FROM ivm.mv_rep").collect()}
+    assert got == {(k, 2) for k in range(5)}
+    assert io.sql("REFRESH MATERIALIZED VIEW ivm.mv_rep").collect()[0].kind == "noop"
