@@ -450,57 +450,3 @@ def read_ocf_with_meta(path: str):
 def field_names(avro_schema: dict) -> list[str]:
     return [f["name"] for f in avro_schema["fields"]]
 
-
-def read_schema(path: str) -> dict:
-    """Parse only the OCF header → Avro schema (driver-side planning)."""
-    with open(path, "rb") as f:
-        data = f.read(1 << 20)  # header is tiny; 1 MB covers any schema
-    r = _Reader(data)
-    if r.raw(4) != MAGIC:
-        raise ValueError(f"{path} is not an Avro object container file")
-    while True:
-        n = r.long()
-        if n == 0:
-            break
-        for _ in range(abs(n)):
-            k = r.str_()
-            v = r.bytes_()
-            if k == "avro.schema":
-                return json.loads(v.decode())
-    raise ValueError(f"{path}: no avro.schema in header")
-
-
-_AVRO_TO_DDL = {
-    "boolean": "boolean", "int": "int", "long": "bigint", "float": "float",
-    "double": "double", "string": "string", "bytes": "binary",
-}
-
-
-def avro_schema_to_ddl(avro_schema: dict) -> str:
-    """Avro record schema → Spark DDL string (for mapInPandas output)."""
-    cols = []
-    for f in avro_schema["fields"]:
-        t = f["type"]
-        if isinstance(t, list):
-            t = [x for x in t if x != "null"][0]
-        cols.append(f"{f['name']} {_type_ddl(t)}")
-    return ", ".join(cols)
-
-
-def _type_ddl(t) -> str:
-    kind, logical = _field_kind(t)
-    if kind == "array":
-        items = logical["items"]
-        if isinstance(items, list):
-            items = [x for x in items if x != "null"][0]
-        return f"array<{_type_ddl(items)}>"
-    lt = logical.get("logicalType")
-    if lt == "date":
-        return "date"
-    if lt == "timestamp-micros":
-        return "timestamp"
-    if lt == "local-timestamp-micros":
-        return "timestamp_ntz"
-    if lt == "decimal":
-        return f"decimal({logical['precision']},{logical['scale']})"
-    return _AVRO_TO_DDL[kind]

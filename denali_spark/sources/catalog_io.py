@@ -4,7 +4,11 @@ Read path (mirrors the reference example's `SELECT * FROM westeros.my_table`,
 /root/reference/examples/pyspark_example.py:29-36):
 
     loadTable REST → metadata JSON → resolve snapshot (current / by id /
-    by branch-tag) → manifest list → data file paths → spark.read.parquet
+    by branch-tag) → manifest list → data file paths, grouped by schema id
+    → spark.read.schema(<that schema>).parquet
+
+Each file group's read schema comes from the table metadata, not from the
+files' footers, so planning a scan starts no Spark job.
 
 Write path (the flow every Spark write triggers against the reference,
 SURVEY §3.2): executors write parquet directly into the warehouse; only the
@@ -49,6 +53,8 @@ LINEAGE_POS = "__dsp_pos"
 # V3 row-lineage column name: virtual on ordinary reads (first-row-id +
 # position), physical in files rewritten by compaction (carry-through)
 ROW_ID = "_row_id"
+# The columns of a position-delete file, as the Iceberg spec fixes them
+POSITION_DELETE_SCHEMA = "file_path string, pos long"
 
 
 def stamp_row_lineage(md: dict, files: list[dict]) -> tuple[int, int]:
@@ -220,15 +226,28 @@ def _is_safe_widening(src, tgt) -> bool:
     INTO semantics). Mirrors Iceberg's type-promotion rules (spec §Schema
     Evolution: int→long, float→double, decimal precision growth) plus the
     value-preserving decimal generalization (scale growth with integer-
-    digit headroom) and integral→decimal with headroom. Everything else —
-    narrowing, cross-family (string→int), timestamp drifts — must be an
-    explicit CAST by the caller: a plain cast would silently NULL or wrap
-    the lossy values instead of failing."""
+    digit headroom) and integral→decimal with headroom. Lists, maps and
+    structs (same field names) widen element by element; nullability never
+    decides. Everything else — narrowing, cross-family (string→int),
+    timestamp drifts — must be an explicit CAST by the caller: a plain
+    cast would silently NULL or wrap the lossy values instead of failing."""
     from pyspark.sql.types import (
-        ByteType, DecimalType, DoubleType, FloatType, IntegerType, LongType,
-        ShortType, TimestampType, DateType,
+        ArrayType, ByteType, DateType, DecimalType, DoubleType, FloatType,
+        IntegerType, LongType, MapType, ShortType, StructType, TimestampType,
     )
 
+    if src == tgt:
+        return True
+    if isinstance(src, ArrayType) and isinstance(tgt, ArrayType):
+        return _is_safe_widening(src.elementType, tgt.elementType)
+    if isinstance(src, MapType) and isinstance(tgt, MapType):
+        return (_is_safe_widening(src.keyType, tgt.keyType)
+                and _is_safe_widening(src.valueType, tgt.valueType))
+    if isinstance(src, StructType) and isinstance(tgt, StructType):
+        return src.fieldNames() == tgt.fieldNames() and all(
+            _is_safe_widening(a.dataType, b.dataType)
+            for a, b in zip(src.fields, tgt.fields)
+        )
     int_digits = {ByteType: 3, ShortType: 5, IntegerType: 10, LongType: 19}
     widen_chain = (ByteType, ShortType, IntegerType, LongType)
     if isinstance(src, widen_chain) and isinstance(tgt, widen_chain):
@@ -567,12 +586,20 @@ class SparkCatalogIO:
         and drops are pure metadata; added columns backfill as typed NULLs
         (schema evolution without rewriting a single file).
 
+        Each group is read under its schema as the table metadata records
+        it (schema_convert.iceberg_schema_to_spark), so planning the scan
+        opens no file: a column the schema lists and a file lacks reads as
+        NULL, and a column only the file has is never read. A regular read
+        thus never surfaces the physical `_row_id` that compaction writes;
+        with_row_ids=True lists it, and files without it read NULL there.
+
         with_lineage=True attaches (file path, row position) columns from
         Spark's parquet `_metadata` — computed executor-side during the scan,
         no extra IO — which is what merge-on-read position deletes join
         against."""
         from functools import reduce
 
+        from denali_spark.sources.schema_convert import iceberg_schema_to_spark
         from denali_spark.sources.schema_evolution import (
             reconcile_to_schema,
             schema_by_id,
@@ -583,36 +610,25 @@ class SparkCatalogIO:
         else:
             target_id = md["current-schema-id"]
         target = schema_by_id(md, target_id)
-        # Grouped additionally by the materialized-lineage flag so files
-        # that physically contain a carried `_row_id` column never share a
-        # footer-sampled read schema with files that don't.
-        groups: dict[tuple[int, str, bool], list[str]] = {}
+        groups: dict[tuple[int, str], list[str]] = {}
         for e in entries:
-            key = (
-                e.get("schema-id", 0),
-                e.get("file-format", "parquet"),
-                bool(e.get("materialized-lineage")),
-            )
+            key = (e.get("schema-id", 0), e.get("file-format", "parquet"))
             groups.setdefault(key, []).append(e["path"])
         extra = (LINEAGE_FILE, LINEAGE_POS) if with_lineage else ()
         if with_row_ids:
             extra = extra + (ROW_ID,)
         dfs = []
-        for (sid, fmt, materialized), paths in sorted(groups.items()):
+        for (sid, fmt), paths in sorted(groups.items()):
+            schema = iceberg_schema_to_spark(schema_by_id(md, sid))
+            if with_row_ids:
+                schema.add(ROW_ID, "long")
             if fmt == "avro" or (fmt == "orc" and with_lineage):
-                # Formats whose row positions Spark can't surface natively
-                # (parquet has _metadata.row_index; ORC and our avro don't)
-                # read through Python kernels that enumerate true in-file
-                # positions. ORC WITHOUT lineage stays on the vectorized
-                # JVM reader — the hot path is untouched.
-                reader = self._read_avro if fmt == "avro" else self._read_orc_lineage
-                df = reader(paths, with_lineage)
+                # Spark surfaces row positions for parquet only; ORC
+                # without lineage stays on its vectorized JVM reader
+                df = self._read_by_kernel(fmt, paths, schema, with_lineage)
             else:
-                df = (
-                    # read.orc takes one path-or-list (2nd positional = mergeSchema)
-                    self.spark.read.orc(list(paths)) if fmt == "orc"
-                    else self.spark.read.parquet(*paths)
-                )
+                reader = self.spark.read.schema(schema)
+                df = reader.orc(paths) if fmt == "orc" else reader.parquet(*paths)
                 if with_lineage:
                     df = df.withColumns({
                         # normalize file:///x → /x so lineage matches manifest paths
@@ -621,14 +637,6 @@ class SparkCatalogIO:
                         ),
                         LINEAGE_POS: F.col("_metadata.row_index"),
                     })
-            if with_row_ids and ROW_ID not in df.columns:
-                # plain files compute ids later (first-row-id + position);
-                # a typed NULL keeps every group unionByName-compatible
-                df = df.withColumn(ROW_ID, F.lit(None).cast("long"))
-            elif not with_row_ids and ROW_ID in df.columns:
-                # a carried physical _row_id is lineage plumbing, not a
-                # table column — regular reads must not surface it
-                df = df.drop(ROW_ID)
             if sid != target_id:
                 df = reconcile_to_schema(
                     df, schema_by_id(md, sid), target, extra_cols=extra,
@@ -692,8 +700,7 @@ class SparkCatalogIO:
         pos_parts = []
         pos_bytes = 0
         if pos:
-            pd_df = self.spark.read.parquet(*[e["path"] for e in pos])
-            pos_parts.append(pd_df.select("file_path", "pos"))
+            pos_parts.append(self._read_position_deletes(pos))
             pos_bytes += sum(e.get("file-size-bytes", 0) for e in pos)
         if dvs:
             # Deletion vectors (Iceberg V3): each entry is one roaring-bitmap
@@ -745,6 +752,14 @@ class SparkCatalogIO:
             df = df.drop("__dsp_seq")
         return df
 
+    def _read_position_deletes(self, entries: list[dict]) -> DataFrame:
+        """The rows of parquet position-delete files, read under the
+        schema the Iceberg spec fixes for them, so planning opens no
+        file."""
+        return self.spark.read.schema(POSITION_DELETE_SCHEMA).parquet(
+            *[e["path"] for e in entries]
+        )
+
     def _dv_positions_df(
         self, dvs: list[dict], with_source: bool = False
     ) -> DataFrame:
@@ -777,76 +792,60 @@ class SparkCatalogIO:
         meta = self.spark.createDataFrame(rows, "p string, o long, s long, ref string")
         if len(rows) > 1:
             meta = meta.repartition(min(len(rows), 32))
-        schema = "file_path string, pos long"
+        schema = POSITION_DELETE_SCHEMA
         if with_source:
             schema += ", delete_file_path string"
         return meta.mapInPandas(kernel, schema)
 
-    def _read_avro(self, paths: list[str], with_lineage: bool) -> DataFrame:
-        """Distributed Avro read: one partition per file, decoded by the
-        pure-Python OCF codec inside a mapInPandas kernel (Arrow-batched;
-        the driver only opens one header for the schema). Lineage carries
-        the true in-file row position, like parquet's _metadata.row_index."""
-        import pandas as pd
+    def _read_by_kernel(self, fmt: str, paths, schema, with_lineage: bool) -> DataFrame:
+        """Avro, and ORC with lineage: one partition per file, decoded in a
+        mapInPandas kernel (Arrow-batched; planning opens no file) by the
+        pure-Python OCF codec or by pyarrow.orc, so every row can carry its
+        true in-file position (Spark's _metadata.row_index is parquet-only).
+        ORC position deletes are written and applied through this kernel,
+        so the two sides always agree on positions. Each file's rows are
+        projected onto `schema` by name, as Spark's own readers do: a
+        listed column the file lacks reads as NULL, and a column the schema
+        does not list is dropped."""
+        from pyspark.sql.types import LongType, StringType, StructType
 
-        from denali_spark.sources.avro_ocf import (
-            avro_schema_to_ddl,
-            field_names,
-            read_ocf,
-            read_schema,
-        )
-
-        ddl = avro_schema_to_ddl(read_schema(paths[0]))
+        names = schema.fieldNames()
         if with_lineage:
-            ddl += f", {LINEAGE_FILE} string, {LINEAGE_POS} long"
+            schema = StructType(schema.fields).add(LINEAGE_FILE, StringType()).add(
+                LINEAGE_POS, LongType()
+            )
+
+        def decode(path):
+            import pandas as pd
+
+            if fmt == "orc":
+                import pyarrow.orc as po
+
+                return po.ORCFile(path).read().to_pandas()
+            from denali_spark.sources.avro_ocf import field_names, read_ocf
+
+            avro_schema, rows = read_ocf(path)
+            return pd.DataFrame(rows, columns=field_names(avro_schema))
 
         def kernel(batches):
+            import pandas as pd
+
             for pdf in batches:
                 for p in pdf["path"]:
-                    schema, rows = read_ocf(p)
-                    out = pd.DataFrame(rows, columns=field_names(schema))
+                    rows = decode(p)
+                    out = pd.DataFrame(
+                        {c: rows[c] if c in rows else None for c in names},
+                        index=rows.index,
+                    )
                     if with_lineage:
                         out[LINEAGE_FILE] = p
-                        out[LINEAGE_POS] = range(len(rows))
+                        out[LINEAGE_POS] = range(len(out))
                     yield out
 
         paths_df = self.spark.createDataFrame(
             [(p,) for p in sorted(paths)], "path string"
         ).repartition(len(paths), "path")
-        return paths_df.mapInPandas(kernel, schema=ddl)
-
-    def _read_orc_lineage(self, paths: list[str], with_lineage: bool = True) -> DataFrame:
-        """Lineage-bearing ORC read: one partition per file, decoded by
-        pyarrow.orc in a mapInPandas kernel so every row carries its true
-        in-file position (Spark's _metadata.row_index is parquet-only).
-        Positions are what merge-on-read position deletes join against —
-        this kernel is used BOTH when writing an ORC position delete and
-        when applying it, so the two sides always agree."""
-        # driver-side: schema from one footer (cheap, no row data)
-        import pyarrow.orc as po
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        spark_schema = from_arrow_schema(po.ORCFile(paths[0]).schema)
-        ddl = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in spark_schema.fields
-        )
-        ddl += f", {LINEAGE_FILE} string, {LINEAGE_POS} long"
-
-        def kernel(batches):
-            import pyarrow.orc as _po
-
-            for pdf in batches:
-                for p in pdf["path"]:
-                    tbl = _po.ORCFile(p).read()
-                    out = tbl.to_pandas()
-                    out[LINEAGE_FILE] = p
-                    out[LINEAGE_POS] = range(len(out))
-                    yield out
-
-        paths_df = self.spark.createDataFrame(
-            [(p,) for p in sorted(paths)], "path string"
-        ).repartition(len(paths), "path")
-        return paths_df.mapInPandas(kernel, schema=ddl)
+        return paths_df.mapInPandas(kernel, schema=schema)
 
     def _write_avro_files(self, df: DataFrame, out_dir: str) -> list[dict]:
         """Distributed Avro write: each task encodes its partition into one
@@ -908,17 +907,14 @@ class SparkCatalogIO:
         return read_manifest_list(path)
 
     def _empty_df(self, md: dict) -> DataFrame:
-        from pyspark.sql.types import StructType
+        """A typed empty relation of the table's current schema — the
+        schema a scan of the same table reports."""
+        from denali_spark.sources.schema_convert import iceberg_schema_to_spark
+        from denali_spark.sources.schema_evolution import current_schema
 
-        from denali_spark.sources.schema_convert import iceberg_schema_to_ddl
-
-        schema = next(
-            s for s in md["schemas"] if s["schema-id"] == md["current-schema-id"]
+        return self.spark.createDataFrame(
+            [], schema=iceberg_schema_to_spark(current_schema(md))
         )
-        # strict=False: nested/unknown types degrade to string — no data
-        # backs the columns of an empty read anyway.
-        ddl = iceberg_schema_to_ddl(schema, strict=False)
-        return self.spark.createDataFrame([], schema=StructType.fromDDL(ddl))
 
     # --- write path --------------------------------------------------------
 
@@ -936,9 +932,14 @@ class SparkCatalogIO:
         branch: str = MAIN,
         summary_extra: dict | None = None,
         dedupe_summary_key: str | None = None,
+        metadata: dict | None = None,
     ) -> dict:
         """Append/overwrite `df` into a catalog table (created on demand),
         committing via the optimistic protocol with bounded retries.
+
+        `metadata`: the table's metadata when the caller has just loaded
+        it, which saves the namespace and table checks and the loadTable
+        request; a commit that loses a CAS race still reloads.
 
         dedupe_summary_key: exactly-once guard for at-least-once callers
         (streaming sinks): names a summary_extra key (e.g.
@@ -987,48 +988,51 @@ class SparkCatalogIO:
                 f"file_format {file_format!r}: the spec lists avro|orc|parquet"
             )
         parts = normalize_partition_by(partition_by) if partition_by else None
-        if not self.client.namespace_exists(namespace):
-            self.client.create_namespace(namespace)
-        if not self.client.table_exists(namespace, name):
-            schema = spark_schema_to_iceberg(df.schema)
-            write_order = None
-            if sort_by:
-                by_name = {f["name"]: f["id"] for f in schema["fields"]}
-                write_order = {
-                    "order-id": 1,
-                    "fields": [
-                        {"transform": "identity", "source-id": by_name[c],
-                         "direction": "asc", "null-order": "nulls-first"}
-                        for c in sort_by
-                    ],
-                }
-            self.client.create_table(
-                namespace,
-                name,
-                schema,
-                partition_spec=build_partition_spec(parts, schema) if parts else None,
-                write_order=write_order,
-                properties={
-                    "denali-spark.manifest-format": "avro",
-                    "write.format.default": file_format or "parquet",
-                },
-            )
-        loaded = self.client.load_table(namespace, name)
-        md = loaded["metadata"]
+        if metadata is None:
+            if not self.client.namespace_exists(namespace):
+                self.client.create_namespace(namespace)
+            if not self.client.table_exists(namespace, name):
+                schema = spark_schema_to_iceberg(df.schema)
+                write_order = None
+                if sort_by:
+                    by_name = {f["name"]: f["id"] for f in schema["fields"]}
+                    write_order = {
+                        "order-id": 1,
+                        "fields": [
+                            {"transform": "identity", "source-id": by_name[c],
+                             "direction": "asc", "null-order": "nulls-first"}
+                            for c in sort_by
+                        ],
+                    }
+                self.client.create_table(
+                    namespace,
+                    name,
+                    schema,
+                    partition_spec=build_partition_spec(parts, schema) if parts else None,
+                    write_order=write_order,
+                    properties={
+                        "denali-spark.manifest-format": "avro",
+                        "write.format.default": file_format or "parquet",
+                    },
+                )
+            metadata = self.client.load_table(namespace, name)["metadata"]
+        md = metadata
         # Align the incoming rows to the TABLE schema (INSERT INTO
         # semantics): a df whose column type drifts from the table's —
-        # e.g. decimal(18,2) rows into a decimal(28,8) column — would
-        # otherwise write a physically mismatched parquet file that later
-        # scans refuse to read. Columns the df omits stay absent (the V3
-        # read-default path); unknown columns fail loudly (evolve the
-        # schema first). Only ATOMIC-to-ATOMIC drifts cast: _empty_df's
-        # strict=False DDL degrades nested types to string, so complex
-        # columns pass through untouched (their fidelity is owned by the
-        # format writers, e.g. the avro array path).
-        from pyspark.sql.types import AtomicType
+        # e.g. decimal(18,2) rows into a decimal(28,8) column, or
+        # array<int> into array<bigint> — would otherwise write a
+        # physically mismatched file that later scans, which read under
+        # the table's types, refuse to read. Columns the df omits stay
+        # absent (the V3 read-default path); unknown columns fail loudly
+        # (evolve the schema first).
+        from denali_spark.sources.schema_convert import iceberg_schema_to_spark
+        from denali_spark.sources.schema_evolution import current_schema
 
-        target_fields = {f.name: f for f in self._empty_df(md).schema.fields}
-        unknown = [c for c in df.columns if c not in target_fields]
+        target_types = {
+            f.name: f.dataType
+            for f in iceberg_schema_to_spark(current_schema(md)).fields
+        }
+        unknown = [c for c in df.columns if c not in target_types]
         if unknown:
             raise ValueError(
                 f"columns {unknown} are not in {'.'.join(namespace)}.{name}'s "
@@ -1036,26 +1040,25 @@ class SparkCatalogIO:
             )
         aligned = []
         for f in df.schema.fields:
-            t = target_fields[f.name].dataType
-            if (t != f.dataType and isinstance(t, AtomicType)
-                    and isinstance(f.dataType, AtomicType)):
-                # Fail-loud INSERT INTO contract: only value-preserving
-                # widenings cast implicitly (a plain cast would silently
-                # NULL/wrap lossy or cross-family drifts like string→int
-                # or overflowing long→int). The whitelist mirrors
-                # Iceberg's schema-promotion rules plus integral→decimal
-                # with integer-digit headroom.
-                if not _is_safe_widening(f.dataType, t):
-                    raise ValueError(
-                        f"column {f.name!r}: cannot implicitly cast "
-                        f"{f.dataType.simpleString()} to the table's "
-                        f"{t.simpleString()} — only lossless widenings "
-                        "are applied; CAST explicitly or evolve the "
-                        "table schema"
-                    )
-                aligned.append(F.col(f.name).cast(t))
-            else:
+            t = target_types[f.name]
+            if t == f.dataType:
                 aligned.append(F.col(f.name))
+                continue
+            # Fail-loud INSERT INTO contract: only value-preserving
+            # widenings cast implicitly (a plain cast would silently
+            # NULL/wrap lossy or cross-family drifts like string→int or
+            # overflowing long→int). The whitelist mirrors Iceberg's
+            # schema-promotion rules plus integral→decimal with
+            # integer-digit headroom.
+            if not _is_safe_widening(f.dataType, t):
+                raise ValueError(
+                    f"column {f.name!r}: cannot implicitly cast "
+                    f"{f.dataType.simpleString()} to the table's "
+                    f"{t.simpleString()} — only lossless widenings "
+                    "are applied; CAST explicitly or evolve the "
+                    "table schema"
+                )
+            aligned.append(F.col(f.name).cast(t))
         df = df.select(*aligned)
         dedupe_value = None
         if dedupe_summary_key is not None:

@@ -41,7 +41,7 @@ mid-range overwrite raises rather than silently replaying the table).
 
 Planning/resolution helpers are the ENGINE's own (catalog_io.
 resolve_snapshot / manifest_entries, schema_evolution.current_schema,
-schema_convert.iceberg_schema_to_ddl) — one implementation, two front
+schema_convert.iceberg_schema_to_spark) — one implementation, two front
 ends.
 """
 
@@ -60,7 +60,7 @@ from pyspark.sql.datasource import (
 )
 
 from denali_spark.catalog.client import CatalogClient
-from denali_spark.sources.schema_convert import ICEBERG_TO_DDL, iceberg_schema_to_ddl
+from denali_spark.sources.schema_convert import iceberg_schema_to_spark
 
 
 @dataclass
@@ -104,6 +104,18 @@ def _load(options):
     client = CatalogClient(uri)
     md = client.load_table(ns.split("."), table)["metadata"]
     return client, ns.split("."), table, md
+
+
+def _flat_spark_schema(schema: dict):
+    """The Spark schema of a table this source serves: flat tables only
+    (the kernels below shape Arrow batches column by column)."""
+    nested = [f["name"] for f in schema["fields"] if not isinstance(f["type"], str)]
+    if nested:
+        raise NotImplementedError(
+            f"column {nested[0]!r} has a nested type; read this table "
+            "through SparkCatalogIO.read_table"
+        )
+    return iceberg_schema_to_spark(schema)
 
 
 def _schema_pairs(md: dict) -> tuple:
@@ -180,24 +192,6 @@ def _load_equality_deletes(eq_groups: list[dict]) -> list[tuple]:
         )
         out.append((int(e.get("sequence-number", 0)), cols, keys))
     return out
-
-
-def _pa_type(iceberg_type: str):
-    import pyarrow as pa
-
-    base = {
-        "boolean": pa.bool_(), "int": pa.int32(), "long": pa.int64(),
-        "float": pa.float32(), "double": pa.float64(), "string": pa.string(),
-        "binary": pa.binary(), "date": pa.date32(),
-        "timestamp": pa.timestamp("us"),
-        "timestamptz": pa.timestamp("us", tz="UTC"),
-    }.get(iceberg_type)
-    if base is None and iceberg_type.startswith("decimal"):
-        p, s = iceberg_type.strip("decimal() ").replace(" ", "").split(",")
-        base = pa.decimal128(int(p), int(s))
-    if base is None:
-        raise NotImplementedError(f"unsupported column type {iceberg_type!r}")
-    return base
 
 
 def _read_parquet_batches(partition: _FilePartition):
@@ -295,6 +289,9 @@ def _shape_batch(batch, columns):
     """Reorder to the declared schema; backfill absent columns as TYPED
     nulls (an untyped null array would fail Spark's Arrow conversion)."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    from denali_spark.sources.schema_convert import iceberg_type_to_spark
 
     arrays, names = [], []
     for c, t in columns:
@@ -302,7 +299,9 @@ def _shape_batch(batch, columns):
         if c in batch.schema.names:
             arrays.append(batch.column(batch.schema.get_field_index(c)))
         else:
-            arrays.append(pa.nulls(batch.num_rows, type=_pa_type(t)))
+            arrays.append(
+                pa.nulls(batch.num_rows, type=to_arrow_type(iceberg_type_to_spark(t)))
+            )
     return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
@@ -553,30 +552,14 @@ def _writer_preflight(options, spark_schema, md: dict | None = None):
         table = options.get("table")
     from denali_spark.sources.schema_evolution import current_schema
 
-    schema = current_schema(md)
-    # The writer initializes in a sessionless Python worker, so the
-    # comparison is textual per field: canonicalize DDL synonyms
-    # (bigint==long, ...) and whitespace on both sides.
-    syn = {"bigint": "long", "integer": "int", "smallint": "short",
-           "tinyint": "byte"}
-
-    def canon(name: str, typ: str):
-        t = typ.lower().replace(" ", "")
-        return (name.lower(), syn.get(t, t))
-
-    table_ddl = iceberg_schema_to_ddl(schema)  # also rejects nested types
-    want = [
-        canon(f["name"], ICEBERG_TO_DDL.get(f["type"].split("(")[0], f["type"]))
-        for f in schema.get("fields", [])
-    ]
-    got = [canon(f.name, f.dataType.simpleString()) for f in spark_schema]
-    if got != want:
-        df_ddl = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in spark_schema
-        )
+    table_schema = _flat_spark_schema(current_schema(md))
+    if [(f.name.lower(), f.dataType) for f in spark_schema] != [
+        (f.name.lower(), f.dataType) for f in table_schema
+    ]:
         raise ValueError(
-            f"dataframe schema ({df_ddl}) does not match table schema "
-            f"({table_ddl}); evolve the table first (sources.schema_evolution)"
+            f"dataframe schema ({spark_schema.simpleString()}) does not match "
+            f"table schema ({table_schema.simpleString()}); evolve the table "
+            "first (sources.schema_evolution)"
         )
     from denali_spark.sources.catalog_io import table_write_format
     from denali_spark.sources.partitioning import spec_to_partition_by
@@ -776,13 +759,13 @@ class DenaliDataSource(DataSource):
             self._md_cache = md
         return md
 
-    def schema(self) -> str:
+    def schema(self):
         from denali_spark.sources.schema_evolution import current_schema
 
-        ddl = iceberg_schema_to_ddl(current_schema(self._metadata()))
+        schema = _flat_spark_schema(current_schema(self._metadata()))
         if (self.options.get("rowids") or "").lower() == "true":
-            ddl += ", _row_id bigint"  # V3 row lineage (batch reads)
-        return ddl
+            schema.add("_row_id", "long")  # V3 row lineage (batch reads)
+        return schema
 
     def reader(self, schema) -> DataSourceReader:
         return _DenaliBatchReader(self.options, self._metadata())

@@ -450,7 +450,7 @@ def metadata_table(
         dfs = []
         if pq:
             dfs.append(
-                spark.read.parquet(*[e["path"] for e in pq]).select(
+                io._read_position_deletes(pq).select(
                     "file_path", "pos",
                     F.regexp_replace(
                         F.col("_metadata.file_path"), "^file:/+", "/"

@@ -580,9 +580,7 @@ def convert_deletes_to_dvs(io: SparkCatalogIO, namespace: list[str], name: str) 
             return {"metadata": md, "noop": True}
         old_dvs = [e for e in deletes if _is_dv(e)]
         eq = [e for e in deletes if e["content"] == "equality-deletes"]
-        rows = io.spark.read.parquet(*[e["path"] for e in pos_parquet]).select(
-            "file_path", "pos"
-        )
+        rows = io._read_position_deletes(pos_parquet)
         new_dvs = _write_dv_file(io, rows, md, old_dvs)
         return _commit_cow(
             io, namespace, name, md, parent_id,
@@ -640,7 +638,7 @@ def rewrite_deletes(io: SparkCatalogIO, namespace: list[str], name: str) -> dict
             # paths of the delete rows (a driver-side list bounded by file
             # count, read from the small delete files only).
             rows = (
-                io.spark.read.parquet(*[e["path"] for e in pos])
+                io._read_position_deletes(pos)
                 .select("file_path").distinct().collect()
             )
             affected_paths.update(r["file_path"] for r in rows)

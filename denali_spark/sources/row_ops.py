@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from denali_spark.catalog.client import CatalogHTTPError
 from denali_spark.sources.catalog_io import (
@@ -259,18 +260,16 @@ def _check_merge_cardinality(source: DataFrame, matched: DataFrame, on: list[str
         )
 
 
-def _merge_fields(md: dict) -> list[tuple[str, str | None]]:
-    """(name, castable DDL type | None) per current-schema column — the
-    cast target that keeps MERGE projection output schema-identical to the
-    table (None for nested types, which pass through positionally)."""
-    from denali_spark.sources.schema_convert import ICEBERG_TO_DDL
+def _merge_fields(md: dict) -> list[tuple[str, DataType]]:
+    """(name, Spark type) per current-schema column — the cast target that
+    keeps MERGE projection output schema-identical to the table."""
+    from denali_spark.sources.schema_convert import iceberg_type_to_spark
     from denali_spark.sources.schema_evolution import current_schema
 
-    out = []
-    for f in current_schema(md)["fields"]:
-        t = f["type"]
-        out.append((f["name"], ICEBERG_TO_DDL.get(t, t) if isinstance(t, str) else None))
-    return out
+    return [
+        (f["name"], iceberg_type_to_spark(f["type"]))
+        for f in current_schema(md)["fields"]
+    ]
 
 
 def _updated_rows(
@@ -300,11 +299,9 @@ def _updated_rows(
         cond = c if cond is None else (cond & c)
     joined = t.join(s, cond, "inner")
     cols = []
-    for n, ddl in fields:
+    for n, typ in fields:
         c = F.expr(update_set[n]) if n in update_set else F.col(f"t.{n}")
-        if ddl is not None:
-            c = c.cast(ddl)
-        cols.append(c.alias(n))
+        cols.append(c.cast(typ).alias(n))
     return joined.select(*cols)
 
 
@@ -332,11 +329,9 @@ def _insert_rows(
     by_col = dict(zip(cols, exprs))
     s = unmatched.alias("s")
     out = []
-    for n, ddl in fields:
+    for n, typ in fields:
         c = F.expr(by_col[n]) if n in by_col else F.lit(None)
-        if ddl is not None:
-            c = c.cast(ddl)
-        out.append(c.alias(n))
+        out.append(c.cast(typ).alias(n))
     return s.select(*out)
 
 

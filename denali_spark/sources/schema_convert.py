@@ -6,6 +6,8 @@ Iceberg assigns fresh ids on table creation.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import types as T
 
 
@@ -82,8 +84,8 @@ def spark_schema_to_iceberg(schema: T.StructType) -> dict:
     }
 
 
-# SQL DDL type name → iceberg primitive (the ALTER TABLE ADD COLUMN surface;
-# inverse of ICEBERG_TO_DDL plus the standard SQL synonyms)
+# SQL DDL type name → iceberg primitive (the ALTER TABLE ADD COLUMN surface,
+# with the standard SQL synonyms)
 DDL_TO_ICEBERG = {
     "boolean": "boolean", "bool": "boolean",
     "int": "int", "integer": "int", "smallint": "int", "tinyint": "int",
@@ -100,7 +102,7 @@ def ddl_type_to_iceberg(ddl: str) -> str:
     """Resolve an ALTER/CREATE DDL type name to its Iceberg primitive;
     decimal(p, s) passes through normalized."""
     t = ddl.strip().lower()
-    m = __import__("re").match(r"decimal\s*\(\s*(\d+)\s*,\s*(\d+)\s*\)$", t)
+    m = re.match(r"decimal\s*\(\s*(\d+)\s*,\s*(\d+)\s*\)$", t)
     if m:
         return f"decimal({m.group(1)}, {m.group(2)})"
     if t in DDL_TO_ICEBERG:
@@ -134,36 +136,55 @@ def shift_schema_field_ids(schema: dict, offset: int) -> int:
     return top
 
 
-# iceberg primitive → spark DDL (shared by the engine's empty-read path and
-# the Python Data Source; nested types are the callers' decision via strict)
-ICEBERG_TO_DDL = {
-    "boolean": "boolean", "int": "int", "long": "long", "float": "float",
-    "double": "double", "string": "string", "binary": "binary",
-    "date": "date", "timestamp": "timestamp_ntz", "timestamptz": "timestamp",
+# Iceberg primitive → Spark type; decimal(P, S) is parsed, not listed.
+_SPARK_PRIMITIVES = {
+    "boolean": T.BooleanType(), "int": T.IntegerType(), "long": T.LongType(),
+    "float": T.FloatType(), "double": T.DoubleType(), "string": T.StringType(),
+    "binary": T.BinaryType(), "date": T.DateType(),
+    "timestamp": T.TimestampNTZType(), "timestamptz": T.TimestampType(),
 }
+_DECIMAL = re.compile(r"decimal\(\s*(\d+)\s*,\s*(\d+)\s*\)")
 
 
-def iceberg_schema_to_ddl(schema: dict, strict: bool = True) -> str:
-    """DDL string for an Iceberg schema dict. strict=True raises on nested
-    or unknown types; strict=False degrades them to string (the empty-read
-    fallback, where no data backs the column anyway)."""
-    fields = []
-    for f in schema.get("fields", []):
-        typ = f["type"]
-        if not isinstance(typ, str):
-            if strict:
-                raise NotImplementedError(
-                    f"column {f['name']!r} has a nested type; read this "
-                    "table through SparkCatalogIO.read_table"
-                )
-            ddl = "string"
-        else:
-            ddl = ICEBERG_TO_DDL.get(typ.split("(")[0]) or (
-                typ if typ.startswith("decimal") else None
-            )
-            if ddl is None:
-                if strict:
-                    raise NotImplementedError(f"unsupported column type {typ!r}")
-                ddl = "string"
-        fields.append(f"{f['name']} {ddl}")
-    return ", ".join(fields)
+def iceberg_type_to_spark(typ) -> T.DataType:
+    """The Spark type of an Iceberg type: a primitive name, or a list, map
+    or struct dict. Every element, value and field is nullable, as Spark's
+    file readers report them (see iceberg_schema_to_spark)."""
+    if isinstance(typ, str):
+        if typ in _SPARK_PRIMITIVES:
+            return _SPARK_PRIMITIVES[typ]
+        m = _DECIMAL.fullmatch(typ)
+        if m:
+            return T.DecimalType(int(m.group(1)), int(m.group(2)))
+    elif typ.get("type") == "list":
+        return T.ArrayType(iceberg_type_to_spark(typ["element"]))
+    elif typ.get("type") == "map":
+        return T.MapType(
+            iceberg_type_to_spark(typ["key"]), iceberg_type_to_spark(typ["value"])
+        )
+    elif typ.get("type") == "struct":
+        return iceberg_schema_to_spark(typ)
+    raise NotImplementedError(f"unsupported column type {typ!r}")
+
+
+def iceberg_schema_to_spark(schema: dict) -> T.StructType:
+    """The Spark schema of an Iceberg schema (or struct type), field names
+    as the schema has them. This is the read schema a scan hands Spark's
+    file readers, which read every column as nullable whatever the file
+    says, so `required` is not carried: a scan and an empty read of the
+    same table report the same schema."""
+    return T.StructType([
+        T.StructField(f["name"], iceberg_type_to_spark(f["type"]))
+        for f in schema.get("fields", [])
+    ])
+
+
+def iceberg_type_to_ddl(typ) -> str:
+    """An Iceberg type as DESCRIBE and SHOW CREATE TABLE print it. Spark's
+    DDL reads Iceberg's primitive names as they are (`long` is its alias of
+    bigint) except the two timestamps; those and the nested types print
+    under their Spark names."""
+    spark_type = iceberg_type_to_spark(typ)
+    if isinstance(typ, str) and not typ.startswith("timestamp"):
+        return typ
+    return spark_type.simpleString()

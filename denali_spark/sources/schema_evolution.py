@@ -25,17 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from denali_spark.sources.catalog_io import SparkCatalogIO
-
-# Iceberg primitive → Spark DDL (for typed NULL backfill of added columns).
-from denali_spark.sources.schema_convert import ICEBERG_TO_DDL  # noqa: E402 — one shared map
-
-
-def type_to_ddl(typ) -> str:
-    if isinstance(typ, str):
-        if typ.startswith("decimal"):
-            return typ
-        return ICEBERG_TO_DDL.get(typ, "string")
-    return "string"  # nested: not needed for backfill in v1
+from denali_spark.sources.schema_convert import iceberg_type_to_spark
 
 
 def schema_by_id(md: dict, schema_id: int) -> dict:
@@ -60,24 +50,13 @@ def reconcile_to_schema(
     cols = []
     for field in target["fields"]:
         old = by_id.get(field["id"])
-        if old is not None and old in df.columns:
-            if isinstance(field["type"], str):
-                # cast covers type PROMOTION (int→long, float→double,
-                # decimal widen): files written before the promotion carry
-                # the old physical type; Catalyst folds away the no-op
-                # casts on files whose type already matches
-                col = F.col(old).cast(type_to_ddl(field["type"]))
-            else:  # nested types don't promote in v1 — pass through
-                col = F.col(old)
-            cols.append(col.alias(field["name"]))
-        else:
-            # column absent from this file group: V3 initial-default if the
-            # field carries one, else typed NULL
-            cols.append(
-                F.lit(field.get("initial-default"))
-                .cast(type_to_ddl(field["type"]))
-                .alias(field["name"])
-            )
+        # a column absent from this file group reads as the V3
+        # initial-default if the field carries one, else a typed NULL; the
+        # cast also covers type PROMOTION (int→long, float→double, decimal
+        # widen) of files written before it, and Catalyst folds it away
+        # where the file's type already matches
+        col = F.col(old) if old is not None else F.lit(field.get("initial-default"))
+        cols.append(col.cast(iceberg_type_to_spark(field["type"])).alias(field["name"]))
     cols.extend(F.col(c) for c in extra_cols)
     return df.select(*cols)
 

@@ -645,7 +645,8 @@ def _write(io, parts: list[str], mode: str, select, clause_sql: str = "",
         qualified = ".".join([*ns, name])
         df = _to_table_schema(select(), md, cols, qualified)
         res = io.write_table(
-            df, ns, name, mode="append" if mode == "append" else "overwrite"
+            df, ns, name, mode="append" if mode == "append" else "overwrite",
+            metadata=md,
         )
     else:
         ns, name = parts[:-1], parts[-1]
@@ -686,7 +687,7 @@ def _write(io, parts: list[str], mode: str, select, clause_sql: str = "",
 
 
 def _to_table_schema(df: DataFrame, md: dict, cols, qualified: str) -> DataFrame:
-    from denali_spark.sources.schema_convert import ICEBERG_TO_DDL
+    from denali_spark.sources.schema_convert import iceberg_type_to_spark
     from denali_spark.sources.schema_evolution import current_schema
 
     fields = current_schema(md)["fields"]
@@ -707,9 +708,7 @@ def _to_table_schema(df: DataFrame, md: dict, cols, qualified: str) -> DataFrame
 
     def target_col(f):
         c = F.col(f["name"]) if f["name"] in names else F.lit(f.get("write-default"))
-        if isinstance(f["type"], str):  # nested types: positional alias only
-            c = c.cast(ICEBERG_TO_DDL.get(f["type"], f["type"]))
-        return c.alias(f["name"])
+        return c.cast(iceberg_type_to_spark(f["type"])).alias(f["name"])
 
     return df.select(*[target_col(f) for f in fields])
 
@@ -721,7 +720,7 @@ def _truncate(io, parts: list[str]) -> DataFrame:
     the truncate (unlike a drop+recreate). No data is scanned — the
     empty relation comes from the schema alone."""
     ns, name, md = _table(io, parts)
-    res = io.write_table(io._empty_df(md), ns, name, mode="overwrite")
+    res = io.write_table(io._empty_df(md), ns, name, mode="overwrite", metadata=md)
     return _dml_summary(io, ns, name, "truncate", "overwrite",
                         res if isinstance(res, dict) else {})
 
@@ -1881,11 +1880,12 @@ def _show_create(io, parts: list[str]) -> DataFrame:
             "createtab_stmt string",
         )
     from denali_spark.sources.partitioning import spec_to_partition_by
-    from denali_spark.sources.schema_evolution import current_schema, type_to_ddl
+    from denali_spark.sources.schema_convert import iceberg_type_to_ddl
+    from denali_spark.sources.schema_evolution import current_schema
 
     cols = []
     for f in current_schema(md)["fields"]:
-        line = f"  {f['name']} {type_to_ddl(f['type'])}"
+        line = f"  {f['name']} {iceberg_type_to_ddl(f['type'])}"
         if f.get("required"):
             line += " NOT NULL"
         if f.get("write-default") is not None:
@@ -1917,7 +1917,8 @@ def _describe(io, parts: list[str], extended: bool) -> DataFrame:
     for maintained views, and — extended — the table-metadata block real
     Spark prints. A view answers from the schema stored at CREATE VIEW."""
     from denali_spark.sources.partitioning import spec_to_partition_by
-    from denali_spark.sources.schema_evolution import current_schema, type_to_ddl
+    from denali_spark.sources.schema_convert import iceberg_type_to_ddl
+    from denali_spark.sources.schema_evolution import current_schema
 
     schema = "col_name string, data_type string, comment string"
     found = _view(io, parts)
@@ -1931,7 +1932,7 @@ def _describe(io, parts: list[str], extended: bool) -> DataFrame:
         )
         if stored and stored.get("fields"):
             # zero manifest loads, even for views over views
-            rows = [(f["name"], type_to_ddl(f["type"]), f.get("doc"))
+            rows = [(f["name"], iceberg_type_to_ddl(f["type"]), f.get("doc"))
                     for f in stored["fields"]]
         else:
             # views created without a stored schema: analyze the view SQL
@@ -1940,7 +1941,7 @@ def _describe(io, parts: list[str], extended: bool) -> DataFrame:
         return io.spark.createDataFrame(rows, schema)
 
     ns, name, md = _table(io, parts)
-    rows = [(f["name"], type_to_ddl(f["type"]), f.get("doc"))
+    rows = [(f["name"], iceberg_type_to_ddl(f["type"]), f.get("doc"))
             for f in current_schema(md)["fields"]]
     spec = spec_to_partition_by(md) or []
     if spec:

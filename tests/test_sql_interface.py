@@ -1544,12 +1544,12 @@ def test_rollup_select_loads_its_source_once(spark, io, probe):
     assert calls == [("GET", f"/v1/namespaces/probe/tables/{t}")]
 
 
-def test_insert_values_sends_five_catalog_requests(spark, io, probe):
-    """One load of the target (a 404 is the unknown-table error), then
-    write_table's namespace check, table check, load and commit; the
-    summary comes from the commit's metadata."""
+def test_insert_values_sends_two_catalog_requests(spark, io, probe):
+    """One load of the target (a 404 is the unknown-table error), whose
+    metadata write_table reuses, then the commit; the summary comes from
+    the commit's metadata."""
     t = probe()
     calls = _requests(io, lambda: io.sql(f"INSERT INTO probe.{t} VALUES (50, 0)").collect())
-    assert [m for m, _path in calls] == ["GET", "HEAD", "HEAD", "GET", "POST"]
+    assert [m for m, _path in calls] == ["GET", "POST"]
     with pytest.raises(ValueError, match="unknown table"):
         io.sql("INSERT INTO probe.nope VALUES (1, 1)")
