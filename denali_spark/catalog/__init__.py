@@ -13,10 +13,10 @@ Parity map (reference → here):
 
 Known deviations (all spec-correct or documented):
 - Manifest lists/manifests follow the Iceberg two-level Avro layout
-  (sources/manifests.py, pure-Python OCF codec; bounds maps are name-keyed
-  with JSON values — see that module's docstring). Legacy JSON lists from
-  older snapshots stay readable. Table *metadata* JSON follows the
-  Iceberg V2 spec.
+  (sources/manifests.py, pure-Python OCF codec; bounds are field-id-keyed
+  binary single-values — see that module's docstring). Only that layout is
+  read: tables written before round 7 are not readable, and there is no
+  migration. Table *metadata* JSON follows the Iceberg V2 spec.
 - Reference bugs fixed per SURVEY §7.5 (requirements enforced, identifier
   check un-inverted, set-default-spec sets default-spec-id, views get CAS).
 """

@@ -480,17 +480,9 @@ def _resolve_plan_snapshot(md: dict, snap_id):
 
 
 def _plan_entries(snap: dict) -> tuple[list[dict], list[dict]]:
-    import json as _json
+    from denali_spark.sources import manifests
 
-    loc = snap["manifest-list"]
-    path = loc[len("file://"):] if loc.startswith("file://") else loc
-    if path.endswith(".json"):  # legacy single-document layout
-        with open(path) as f:
-            entries = _json.load(f)["files"]
-    else:
-        from denali_spark.sources.manifests import read_manifest_list
-
-        entries = read_manifest_list(path)
+    entries = manifests.read_manifest_list(snap["manifest-list"])
     data = [e for e in entries if e.get("content", "data") == "data"]
     deletes = [e for e in entries if e.get("content", "data") != "data"]
     return data, deletes

@@ -17,10 +17,11 @@ catalog, guarded by assert-ref-snapshot-id and retried on 409 — classic
 optimistic concurrency.
 
 Manifest lists follow the Iceberg two-level Avro layout (manifest_file
-records pointing at manifest_entry Avro files — sources/manifests.py),
-written through the pure-Python OCF codec; legacy JSON lists from earlier
-snapshots stay readable. Each manifest entry carries record-count and
-per-file min/max stats for the partition-pruning scan path.
+records pointing at manifest_entry Avro files), read and written only by
+sources/manifests.py through the pure-Python OCF codec. No other layout is
+read: tables from before round 7 are not readable, and there is no
+migration. Each manifest entry carries record-count and per-file min/max
+stats for the partition-pruning scan path.
 
 Scale notes: the catalog only ever sees O(1)-sized metadata per commit; data
 volume never transits the catalog. Reads hand Spark a file list — pruning,
@@ -31,7 +32,6 @@ real Iceberg Spark writer.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 import uuid
@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from denali_spark.catalog.client import CatalogClient, CatalogHTTPError
 from denali_spark.catalog.metadata import _fs_path  # file://-aware path mapping
+from denali_spark.sources import manifests
 from denali_spark.sources.schema_convert import spark_schema_to_iceberg
 
 MAIN = "main"
@@ -228,15 +229,17 @@ def _is_safe_widening(src, tgt) -> bool:
     value-preserving decimal generalization (scale growth with integer-
     digit headroom) and integral→decimal with headroom. Lists, maps and
     structs (same field names) widen element by element; nullability never
-    decides. Everything else — narrowing, cross-family (string→int),
+    decides. A void (NullType) source, such as a bare NULL literal, casts
+    losslessly to any type. Everything else — narrowing, cross-family (string→int),
     timestamp drifts — must be an explicit CAST by the caller: a plain
     cast would silently NULL or wrap the lossy values instead of failing."""
     from pyspark.sql.types import (
         ArrayType, ByteType, DateType, DecimalType, DoubleType, FloatType,
-        IntegerType, LongType, MapType, ShortType, StructType, TimestampType,
+        IntegerType, LongType, MapType, NullType, ShortType, StructType,
+        TimestampType,
     )
 
-    if src == tgt:
+    if src == tgt or isinstance(src, NullType):
         return True
     if isinstance(src, ArrayType) and isinstance(tgt, ArrayType):
         return _is_safe_widening(src.elementType, tgt.elementType)
@@ -413,7 +416,7 @@ class SparkCatalogIO:
                 delete_entries = [d["x-denali-entry"] for d in delete_specs]
         else:
             entries, delete_entries = split_entries(
-                self._manifest_entries(snap["manifest-list"])
+                manifests.read_manifest_list(snap["manifest-list"])
             )
             if where is not None:
                 from denali_spark.sources.bloom import bloom_prune
@@ -650,10 +653,7 @@ class SparkCatalogIO:
         spec's rule — equality_ids reference field ids, not names): resolve
         ids to the read schema's names so deletes keep matching after
         rename_column, and a reused name can never silently match the wrong
-        column. Legacy name-keyed manifests (no equality-field-ids) fall
-        back to write-time names."""
-        if not fids or target_schema is None:
-            return list(write_names)
+        column."""
         by_id = {f["id"]: f["name"] for f in target_schema["fields"]}
         out = []
         for fid, wname in zip(fids, write_names):
@@ -671,7 +671,7 @@ class SparkCatalogIO:
         df: DataFrame,
         data_entries: list[dict],
         delete_entries: list[dict],
-        target_schema: dict | None = None,
+        target_schema: dict,
     ) -> DataFrame:
         """Apply merge-on-read delete files to a lineage-bearing DataFrame
         (already reconciled to `target_schema`).
@@ -731,7 +731,7 @@ class SparkCatalogIO:
             groups: dict[tuple, list[dict]] = {}
             for e in eq:
                 key = (int(e.get("sequence-number", 0)),
-                       tuple(e.get("equality-field-ids") or ()),
+                       tuple(e["equality-field-ids"]),
                        tuple(e["equality-columns"]))
                 groups.setdefault(key, []).append(e)
             for (dseq, fids, wcols), group in sorted(groups.items()):
@@ -896,15 +896,6 @@ class SparkCatalogIO:
             }
             for r in sorted(out, key=lambda r: r["path"])
         ]
-
-    def _manifest_entries(self, manifest_list_location: str) -> list[dict]:
-        path = _fs_path(manifest_list_location)
-        if path.endswith(".json"):  # legacy single-document layout
-            with open(path) as f:
-                return json.load(f)["files"]
-        from denali_spark.sources.manifests import read_manifest_list
-
-        return read_manifest_list(path)
 
     def _empty_df(self, md: dict) -> DataFrame:
         """A typed empty relation of the table's current schema — the
@@ -1142,7 +1133,7 @@ class SparkCatalogIO:
             prev_files = []
             if mode == "append" and parent_id is not None:
                 prev = self._resolve_snapshot(md, parent_id)
-                prev_files = self._manifest_entries(prev["manifest-list"])
+                prev_files = manifests.read_manifest_list(prev["manifest-list"])
             snapshot_id = int(time.time() * 1000) * 1000 + (uuid.uuid4().int % 1000)
             seq = md.get("last-sequence-number", 0) + 1
             # Stamp the commit's sequence number on the files it adds — the
@@ -1414,8 +1405,6 @@ class SparkCatalogIO:
     ) -> str:
         """Write the snapshot's manifest list; the table's current schema
         rides along so bounds are field-id-keyed binary single-values."""
-        from denali_spark.sources.manifests import write_manifest_list
-
         schema = None
         for s in md.get("schemas", []):
             if s.get("schema-id") == md.get("current-schema-id", 0):
@@ -1426,7 +1415,7 @@ class SparkCatalogIO:
             if spec.get("spec-id") == md.get("default-spec-id", 0):
                 spec_fields = spec.get("fields", [])
                 break
-        return write_manifest_list(
+        return manifests.write_manifest_list(
             os.path.join(_fs_path(md["location"]), "metadata"),
             snapshot_id,
             files,
@@ -1674,11 +1663,13 @@ class SparkCatalogIO:
                 f"{picked.get('summary', {}).get('operation')!r})"
             )
         parent_id = picked.get("parent-snapshot-id")
-        picked_files = self._manifest_entries(picked["manifest-list"])
+        picked_files = manifests.read_manifest_list(picked["manifest-list"])
         base_paths: set[str] = set()
         if parent_id is not None:
             parent = self._resolve_snapshot(md, parent_id)
-            base_paths = {f["path"] for f in self._manifest_entries(parent["manifest-list"])}
+            base_paths = {
+                f["path"] for f in manifests.read_manifest_list(parent["manifest-list"])
+            }
         added = [dict(f) for f in picked_files if f["path"] not in base_paths]
         # pre-lineage files (no first-row-id at birth) get ranges assigned
         # per attempt; files born with ranges keep them across retries
@@ -1689,7 +1680,7 @@ class SparkCatalogIO:
             head_id = head["snapshot-id"] if head else None
             head_files = []
             if head_id is not None:
-                head_files = self._manifest_entries(
+                head_files = manifests.read_manifest_list(
                     self._resolve_snapshot(md, head_id)["manifest-list"]
                 )
             dupes = {f["path"] for f in head_files} & {f["path"] for f in added}
@@ -1964,8 +1955,3 @@ def resolve_snapshot(
     SparkCatalogIO instance."""
     return SparkCatalogIO._resolve_snapshot(None, md, snapshot_id, ref, as_of_ms)
 
-
-def manifest_entries(manifest_list_location: str) -> list[dict]:
-    """Module-level manifest-list decode (Avro or legacy JSON by
-    extension) — shared with the Python Data Source."""
-    return SparkCatalogIO._manifest_entries(None, manifest_list_location)

@@ -35,6 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from denali_spark.sources import manifests
 from denali_spark.sources.catalog_io import (
     LINEAGE_FILE,
     LINEAGE_POS,
@@ -146,11 +147,12 @@ def read_changes(
         )
     prev = by_id.get(parent_id)
     prev_data, prev_deletes = (
-        split_entries(io._manifest_entries(prev["manifest-list"])) if prev else ([], [])
+        split_entries(manifests.read_manifest_list(prev["manifest-list"]))
+        if prev else ([], [])
     )
     for ordinal, snap in enumerate(chain):
         cur_data, cur_deletes = split_entries(
-            io._manifest_entries(snap["manifest-list"])
+            manifests.read_manifest_list(snap["manifest-list"])
         )
         sid = snap["snapshot-id"]
         prev_paths = {e["path"] for e in prev_data}

@@ -40,7 +40,7 @@ append-only snapshot range, exactly like Iceberg's streaming read (a
 mid-range overwrite raises rather than silently replaying the table).
 
 Planning/resolution helpers are the ENGINE's own (catalog_io.
-resolve_snapshot / manifest_entries, schema_evolution.current_schema,
+resolve_snapshot, manifests.read_manifest_list, schema_evolution.current_schema,
 schema_convert.iceberg_schema_to_spark) — one implementation, two front
 ends.
 """
@@ -332,12 +332,8 @@ def _filter_to_expr(f):
 
 class _DenaliBatchReader(DataSourceReader):
     def __init__(self, options, md: dict):
-        from denali_spark.catalog.metadata import _fs_path
-        from denali_spark.sources.catalog_io import (
-            manifest_entries,
-            resolve_snapshot,
-            split_entries,
-        )
+        from denali_spark.sources import manifests
+        from denali_spark.sources.catalog_io import resolve_snapshot, split_entries
 
         self._columns = _schema_pairs(md)
         self._options = options
@@ -349,7 +345,7 @@ class _DenaliBatchReader(DataSourceReader):
         self._entries = []
         if snap is not None:
             data, deletes = split_entries(
-                manifest_entries(_fs_path(snap["manifest-list"]))
+                manifests.read_manifest_list(snap["manifest-list"])
             )
             (self._entries, self._dv_by_path, self._eq_by_seq,
              self._pos_deletes) = _checked_entries(md, data, deletes)
@@ -485,18 +481,18 @@ class _DenaliStreamReader(DataSourceStreamReader):
         stamp = snap.get("summary", {}).get("added-data-files")
         if stamp is not None:
             return int(stamp)
-        from denali_spark.catalog.metadata import _fs_path
-        from denali_spark.sources.catalog_io import manifest_entries, split_entries
+        from denali_spark.sources import manifests
+        from denali_spark.sources.catalog_io import split_entries
 
         seq = snap.get("sequence-number", 0)
         data, _deletes = split_entries(
-            manifest_entries(_fs_path(snap["manifest-list"]))
+            manifests.read_manifest_list(snap["manifest-list"])
         )
         return sum(1 for e in data if int(e.get("sequence-number", 0)) == seq)
 
     def partitions(self, start: dict, end: dict):
-        from denali_spark.catalog.metadata import _fs_path
-        from denali_spark.sources.catalog_io import manifest_entries, split_entries
+        from denali_spark.sources import manifests
+        from denali_spark.sources.catalog_io import split_entries
         from denali_spark.sources.incremental import _chain
 
         start_id, end_id = start.get("snapshot_id"), end.get("snapshot_id")
@@ -515,7 +511,7 @@ class _DenaliStreamReader(DataSourceStreamReader):
             )
         seqs = {s["sequence-number"] for s in chain}
         data, _deletes = split_entries(
-            manifest_entries(_fs_path(chain[-1]["manifest-list"]))
+            manifests.read_manifest_list(chain[-1]["manifest-list"])
         )
         added = [
             e for e in data if int(e.get("sequence-number", 0)) in seqs
@@ -619,6 +615,7 @@ def _commit_files(ctx, messages, overwrite: bool, summary_extra: dict) -> None:
     — replay after a checkpoint restart is a no-op."""
     from pyspark.sql import SparkSession
 
+    from denali_spark.sources import manifests
     from denali_spark.sources.catalog_io import (
         MAIN,
         SparkCatalogIO,
@@ -648,7 +645,9 @@ def _commit_files(ctx, messages, overwrite: bool, summary_extra: dict) -> None:
         carried: list[dict] = []
         if parent_id is not None and not overwrite:
             snap = io._resolve_snapshot(md, parent_id)
-            data, deletes = split_entries(io._manifest_entries(snap["manifest-list"]))
+            data, deletes = split_entries(
+                manifests.read_manifest_list(snap["manifest-list"])
+            )
             carried = data + deletes
         new = [
             {

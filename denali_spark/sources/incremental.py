@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from denali_spark.sources import manifests
 from denali_spark.sources.catalog_io import SparkCatalogIO, split_entries
 
 
@@ -75,7 +76,7 @@ def read_incremental(
         )
     seqs = {s["sequence-number"] for s in chain}
     to_snap = chain[-1]
-    data, _deletes = split_entries(io._manifest_entries(to_snap["manifest-list"]))
+    data, _deletes = split_entries(manifests.read_manifest_list(to_snap["manifest-list"]))
     added = [e for e in data if int(e.get("sequence-number", 0)) in seqs]
     if not added:
         return io._empty_df(md)

@@ -79,6 +79,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import functions as F
 
 from denali_spark.catalog.client import CatalogHTTPError
+from denali_spark.sources import manifests
 from denali_spark.sources.catalog_io import MAIN, SparkCatalogIO, split_entries
 from denali_spark.sources.changelog import read_changes
 from denali_spark.sources.expressions import and_, file_might_match, gt_eq, lt_eq
@@ -622,7 +623,7 @@ def _fold_delta_commit(
     ref = tgt_md["refs"][MAIN]
     parent_id = ref["snapshot-id"]
     snap = next(s for s in tgt_md["snapshots"] if s["snapshot-id"] == parent_id)
-    data, deletes = split_entries(io._manifest_entries(snap["manifest-list"]))
+    data, deletes = split_entries(manifests.read_manifest_list(snap["manifest-list"]))
 
     if bounds["groups"] == 0:
         # Net-zero change set (e.g. the range held only compactions whose

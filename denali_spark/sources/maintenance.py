@@ -20,6 +20,7 @@ deployment runs:
 
 from __future__ import annotations
 
+from denali_spark.sources import manifests
 from denali_spark.sources.catalog_io import (
     LINEAGE_FILE,
     LINEAGE_POS,
@@ -184,17 +185,14 @@ def expire_snapshots(
         from denali_spark.catalog.metadata import _fs_path
 
         for snap in removable:
-            list_path = _fs_path(snap["manifest-list"])
-            doomed = [list_path]
-            if not list_path.endswith(".json"):
-                try:
-                    from denali_spark.sources.avro_ocf import read_ocf
-
-                    schema, rows = read_ocf(list_path)
-                    i = [f["name"] for f in schema["fields"]].index("manifest_path")
-                    doomed += [r[i] for r in rows]
-                except (OSError, ValueError):
-                    continue  # already gone / unreadable: nothing to clean
+            try:
+                doomed = [
+                    mf["manifest_path"]
+                    for mf in manifests.read_manifest_files(snap["manifest-list"])
+                ]
+            except (OSError, ValueError):
+                continue  # already gone / unreadable: nothing to clean
+            doomed.append(_fs_path(snap["manifest-list"]))
             for path in doomed:
                 try:
                     os.remove(path)
@@ -282,22 +280,15 @@ def remove_orphan_files(
     md = io.client.load_table(namespace, name)["metadata"]
     referenced: set[str] = set()
     for snap in md.get("snapshots", []):
-        list_path = _fs_path(snap["manifest-list"])
-        referenced.add(list_path)
-        if not list_path.endswith(".json"):
-            try:
-                from denali_spark.sources.avro_ocf import read_ocf
-
-                schema, rows = read_ocf(list_path)
-                i = [f["name"] for f in schema["fields"]].index("manifest_path")
-                referenced.update(r[i] for r in rows)
-            except (OSError, ValueError):
-                pass
-        for e in io._manifest_entries(snap["manifest-list"]):
-            referenced.add(e["path"])
+        referenced.add(_fs_path(snap["manifest-list"]))
+        for mf in manifests.read_manifest_files(snap["manifest-list"]):
+            referenced.add(mf["manifest_path"])
+            referenced.update(
+                e["path"] for _s, _sid, e in manifests.read_manifest(mf["manifest_path"])
+            )
 
     def is_manifest_artifact(fname: str) -> bool:
-        return fname.endswith((".manifest-list.avro", ".manifest-list.json")) or (
+        return fname.endswith(".manifest-list.avro") or (
             fname.endswith(".avro") and "-m" in fname
         )
 
@@ -389,7 +380,7 @@ def compact_data_files(
         if parent_id is None:
             return {"metadata": md, "noop": True}
         snap = io._resolve_snapshot(md, parent_id)
-        data, deletes = split_entries(io._manifest_entries(snap["manifest-list"]))
+        data, deletes = split_entries(manifests.read_manifest_list(snap["manifest-list"]))
         small = [
             e for e in data
             if e.get("file-size-bytes", target_file_size_bytes) < target_file_size_bytes
@@ -571,7 +562,7 @@ def rewrite_clustered(
         if parent_id is None:
             return {"metadata": md, "noop": True}
         snap = io._resolve_snapshot(md, parent_id)
-        data, deletes = split_entries(io._manifest_entries(snap["manifest-list"]))
+        data, deletes = split_entries(manifests.read_manifest_list(snap["manifest-list"]))
         if not data:
             return {"metadata": md, "noop": True}
         parts = spec_to_partition_by(md)
@@ -718,7 +709,7 @@ def analyze_table(
             )
         cur_schema_id = md.get("current-schema-id", 0)
         entries = [
-            e for e in io._manifest_entries(snap["manifest-list"])
+            e for e in manifests.read_manifest_list(snap["manifest-list"])
             if e.get("content", "data") == "data"
             and e.get("file-format", "parquet") == "parquet"
             # Soundness: a raw parquet read of a PRE-EVOLUTION file would
@@ -985,7 +976,7 @@ def analyze_table_incremental(
     cur_schema_id = md.get("current-schema-id", 0)
     from denali_spark.sources.catalog_io import split_entries
 
-    data, _deletes = split_entries(io._manifest_entries(snap["manifest-list"]))
+    data, _deletes = split_entries(manifests.read_manifest_list(snap["manifest-list"]))
     new_entries = [
         e for e in data if int(e.get("sequence-number", 0)) in chain_seqs
     ]

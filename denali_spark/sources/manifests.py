@@ -5,8 +5,7 @@ The reference's REST contract hands clients a `manifest-list` location
 (SparkCatalog, pyiceberg — /root/reference/examples/pyspark_example.py:14-22)
 expect to be an Avro object-container file of `manifest_file` records, each
 pointing at a manifest Avro of `manifest_entry` records wrapping a
-ContentFile (openapi.yml:3400+). Earlier rounds wrote a single JSON document
-instead (documented deviation); this module writes the spec's two-level Avro
+ContentFile (openapi.yml:3400+). This module writes the spec's two-level Avro
 layout through the pure-Python OCF codec:
 
     snap-<id>.manifest-list.avro      manifest_file records (data + deletes)
@@ -36,9 +35,8 @@ back to the engine's readable strings by the read adapter.
 Remaining documented deviations from what pyiceberg/SparkCatalog could
 consume directly (full interop is environment-blocked here — no Iceberg
 jar/pyiceberg to test against, SURVEY §8):
-- mixed-spec snapshots (after partition evolution) fall back to a
-  name-keyed JSON map for that manifest — real Iceberg splits manifests
-  per spec-id instead;
+- a manifest whose partition tuples do not fit its spec's typed struct
+  carries them as a name-keyed JSON map;
 - columns absent from the schema (or with non-encodable stat values) fall
   back to name-keyed JSON bounds in `x_lower_bounds_json` /
   `x_upper_bounds_json` / `x_null_counts_json`;
@@ -49,9 +47,13 @@ Data-file paths are written as `file://` URIs (Iceberg's convention) and
 mapped back to local paths by the read adapter, so the engine's internal
 entry dicts keep carrying plain paths.
 
-Legacy manifests remain readable: round-3 JSON lists dispatch on file
-extension, and round-4 Avro manifests (name-keyed string-map bounds) decode
-through their own embedded schema — the entry adapter handles both shapes.
+This is the only module that opens a manifest list or a manifest:
+`read_manifest_files` reads a list's `manifest_file` records and
+`read_manifest` decodes one manifest; `read_manifest_list` composes the
+two. Only the spec's two-level Avro layout is read, and every manifest
+header must carry `schema` and `partition-spec-id`. Tables written before
+round 7 (JSON manifest lists, name-keyed bounds, headers without a
+trustworthy spec id) are not readable, and there is no migration.
 """
 
 from __future__ import annotations
@@ -63,7 +65,13 @@ import os
 import struct
 import uuid
 
-from denali_spark.sources.avro_ocf import read_ocf, read_ocf_with_meta, write_ocf
+from denali_spark.catalog.metadata import _fs_path
+from denali_spark.sources.avro_ocf import (
+    field_names,
+    read_ocf,
+    read_ocf_with_meta,
+    write_ocf,
+)
 
 CONTENT_TO_INT = {"data": 0, "position-deletes": 1, "equality-deletes": 2}
 INT_TO_CONTENT = {v: k for k, v in CONTENT_TO_INT.items()}
@@ -404,7 +412,7 @@ def _entry_schema_with_partition(partition_schema: dict) -> dict:
 
 def _partition_is_typed(manifest_schema: dict) -> bool:
     """Does this manifest's embedded Avro schema carry the typed r102
-    partition struct (current writer) or the name-keyed map (legacy)?"""
+    partition struct or the name-keyed JSON map?"""
     try:
         df = next(f for f in manifest_schema["fields"] if f["name"] == "data_file")
         pt = next(f for f in df["type"]["fields"] if f["name"] == "partition")["type"]
@@ -497,19 +505,17 @@ def entry_to_data_file(
 
 
 def _decode_bounds(rec: dict, schema: dict | None) -> dict[str, dict]:
-    """Reassemble name-keyed stats from whichever shapes the record carries:
-    id-keyed binary k/v arrays (current writer), name-keyed JSON fallback
-    fields (current writer, schema-less columns), or the round-4 name-keyed
-    string maps in lower_bounds/upper_bounds (legacy files decode through
-    their own embedded schema, so those fields arrive as plain dicts)."""
+    """Reassemble name-keyed stats from the id-keyed binary k/v arrays,
+    plus the name-keyed JSON fallback fields that carry stats of columns
+    outside the schema."""
     stats: dict[str, dict] = {}
-    lower, upper = rec.get("lower_bounds"), rec.get("upper_bounds")
-    if isinstance(lower, list):  # id-keyed binary (logical map)
+    lower = rec.get("lower_bounds")
+    if lower:
         by_id = _schema_by_id(schema)
         nulls = {
             kv["key"]: kv["value"] for kv in (rec.get("null_value_counts") or [])
         }
-        uppers = {kv["key"]: kv["value"] for kv in (upper or [])}
+        uppers = {kv["key"]: kv["value"] for kv in (rec.get("upper_bounds") or [])}
         for kv in lower:
             fid = kv["key"]
             if fid not in by_id or fid not in uppers:
@@ -519,14 +525,6 @@ def _decode_bounds(rec: dict, schema: dict | None) -> dict[str, dict]:
                 "min": decode_single_value(ftype, kv["value"]),
                 "max": decode_single_value(ftype, uppers[fid]),
                 "null-count": nulls.get(fid, 0),
-            }
-    elif isinstance(lower, dict):  # legacy round-4 name-keyed JSON maps
-        nulls = rec.get("null_value_counts") or {}
-        for c in lower:
-            stats[c] = {
-                "min": json.loads(lower[c]),
-                "max": json.loads((upper or {})[c]),
-                "null-count": nulls.get(c, 0),
             }
     jl = rec.get("x_lower_bounds_json")
     if jl:
@@ -636,21 +634,20 @@ def write_manifest_list(
     both. `schema` (the table's current Iceberg schema) is REQUIRED
     (round 7): bounds are always field-id-keyed binary single-values and
     the schema is embedded in each manifest's header metadata for the
-    read adapter — the name-keyed JSON fields remain only as a read-compat
-    shape for legacy manifests and for stats of columns since dropped
-    from the schema. Returns the manifest-list path."""
+    read adapter — the name-keyed JSON fields carry only stats of columns
+    outside the schema. Returns the manifest-list path."""
     if schema is None:
         raise ValueError(
             "write_manifest_list requires the table schema: bounds are "
-            "field-id-keyed binary single-values (Iceberg spec Appendix D); "
-            "schema-less name-keyed JSON bounds are a read-only legacy shape"
+            "field-id-keyed binary single-values (Iceberg spec Appendix D)"
         )
     os.makedirs(metadata_dir, exist_ok=True)
     # Manifests split per (content, spec-id) — real Iceberg's layout. An
     # entry carried through commits keeps the spec its tuple was written
-    # under (`spec-id`, reattached by read_manifest_list from the header),
-    # so each manifest's header records the TRUE encoding spec and the
-    # read side can prune exactly across transform-width spec evolution.
+    # under (`spec-id`, set by read_manifest from the header), so each
+    # manifest's header records the true encoding spec and the read side
+    # prunes exactly across transform-width spec evolution. Fresh entries
+    # were just written under the caller's current spec.
     spec_fields_by_id = {
         s.get("spec-id", 0): s.get("fields", [])
         for s in (all_specs or [])
@@ -661,39 +658,21 @@ def write_manifest_list(
     deletes = [e for e in entries if e.get("content", "data") != "data"]
 
     def _by_spec(group):
-        # Entries carried from a PRE-SPLIT manifest (read_manifest_list
-        # marks them spec-id-unknown) must NOT be relabeled with the
-        # current spec inside a trusted spec-id-exact manifest: after a
-        # transform-width evolution that would prune old-layout tuples
-        # against the wrong spec and silently drop live files. They go into
-        # a separate manifest written WITHOUT the flag, so the read side
-        # keeps them on the conservative multi-spec pruning path. Fresh
-        # entries (no marker, no label) were just written under the
-        # caller's current spec and stay on the exact path. The
-        # (exact, spec_id, entries) triple drives the header flag below.
         by: dict[int, list[dict]] = {}
-        unknown: list[dict] = []
         for e in group:
-            if e.get("spec-id") is not None:
-                by.setdefault(int(e["spec-id"]), []).append(e)
-            elif e.get("spec-id-unknown"):
-                unknown.append(e)
-            else:
-                by.setdefault(partition_spec_id, []).append(e)
-        out = [(True, sid, g) for sid, g in sorted(by.items())]
-        if unknown:
-            out.append((False, partition_spec_id, unknown))
-        return out
+            sid = e.get("spec-id")
+            by.setdefault(
+                partition_spec_id if sid is None else int(sid), []
+            ).append(e)
+        return sorted(by.items())
 
     if data or not deletes:
         if data:
-            groups.extend(
-                (0, sid, g, exact) for exact, sid, g in _by_spec(data)
-            )
+            groups.extend((0, sid, g) for sid, g in _by_spec(data))
         else:
-            groups.append((0, partition_spec_id, [], True))
+            groups.append((0, partition_spec_id, []))
     if deletes:
-        groups.extend((1, sid, g, exact) for exact, sid, g in _by_spec(deletes))
+        groups.extend((1, sid, g) for sid, g in _by_spec(deletes))
 
     entry_fields = [f["name"] for f in MANIFEST_ENTRY_SCHEMA["fields"]]
 
@@ -704,11 +683,11 @@ def write_manifest_list(
 
     manifest_files = []
     base = uuid.uuid4().hex
-    for i, (content, group_spec_id, group, spec_exact) in enumerate(groups):
+    for i, (content, group_spec_id, group) in enumerate(groups):
         group_spec = spec_fields_by_id.get(group_spec_id, partition_spec or [])
         # Typed r102 partition struct (per manifest): only when the spec is
         # known and every entry's partition tuple fits it exactly —
-        # otherwise that manifest keeps the legacy name-keyed JSON map
+        # otherwise that manifest keeps the name-keyed JSON map
         # (self-describing either way via the embedded Avro schema).
         vtypes = partition_value_types(group_spec, schema)
         tmap = partition_transforms(group_spec)
@@ -718,17 +697,9 @@ def write_manifest_list(
             "content": "data" if content == 0 else "deletes",
             "partition-spec": json.dumps(group_spec),
             "partition-spec-id": str(group_spec_id),
-            # declares the per-spec-id split: pre-split manifests stamped
-            # carried-through entries with the CURRENT spec-id, so their
-            # headers must not feed exact pruning — only manifests whose
-            # entries ALL carried an explicit spec-id label get this flag;
-            # unlabeled carried entries are written into a separate
-            # unflagged manifest (see _by_spec) and stay conservative
-            "spec-id-exact": "true" if spec_exact else "false",
+            "schema": json.dumps(schema),
+            "schema-id": str(schema.get("schema-id", 0)),
         }
-        if schema is not None:
-            manifest_meta["schema"] = json.dumps(schema)
-            manifest_meta["schema-id"] = str(schema.get("schema-id", 0))
         group_vtypes = (
             vtypes if vtypes and _typed_partition_ok(group, vtypes, tmap)
             else None
@@ -786,49 +757,45 @@ def write_manifest_list(
     return list_path
 
 
-def read_manifest_list(list_path: str) -> list[dict]:
-    """Read the Avro manifest list → flat internal entry dicts (the shape
-    the whole data plane consumes). Each manifest's bounds decode through
-    the schema in its own header metadata."""
-    schema, rows = read_ocf(list_path)
-    names = [f["name"] for f in schema["fields"]]
-    entries: list[dict] = []
-    for row in rows:
-        mf = dict(zip(names, row))
-        mschema, mrows, mmeta = read_ocf_with_meta(mf["manifest_path"])
-        table_schema = json.loads(mmeta["schema"]) if "schema" in mmeta else None
-        typed_part = _partition_is_typed(mschema)
-        tmap = partition_transforms(
-            json.loads(mmeta.get("partition-spec", "[]"))
+def read_manifest_files(list_location: str) -> list[dict]:
+    """A manifest list's `manifest_file` records, keyed by the spec's field
+    names. `list_location` is a snapshot's `manifest-list` as written."""
+    schema, rows = read_ocf(_fs_path(list_location))
+    names = field_names(schema)
+    return [dict(zip(names, row)) for row in rows]
+
+
+def read_manifest(manifest_path: str) -> list[tuple[int, int | None, dict]]:
+    """One manifest → (status, snapshot_id, internal entry) per
+    manifest_entry. Bounds decode through the table schema in the
+    manifest's header, and every partitioned entry is labelled with the
+    header's `partition-spec-id`, the spec its tuple was written under.
+    Pure Python, so it also runs on executors."""
+    mschema, mrows, mmeta = read_ocf_with_meta(manifest_path)
+    table_schema = json.loads(mmeta["schema"])
+    typed_part = _partition_is_typed(mschema)
+    tmap = partition_transforms(json.loads(mmeta["partition-spec"]))
+    spec_id = int(mmeta["partition-spec-id"])
+    names = field_names(mschema)
+    out = []
+    for mrow in mrows:
+        rec = dict(zip(names, mrow))
+        entry = data_file_to_entry(
+            rec["data_file"], rec["sequence_number"], table_schema,
+            partition_typed=typed_part,
+            partition_transforms_map=tmap,
         )
-        mnames = [f["name"] for f in mschema["fields"]]
-        # the manifest header records which spec its entries' tuples encode
-        # under — reattached per entry so pruning can be EXACT across
-        # partition-spec evolution. Gated on the spec-id-exact flag: only
-        # manifests written split-per-spec-id have trustworthy headers
-        # (pre-split writers stamped carried entries with the spec current
-        # at rewrite time); unflagged manifests keep entries unlabeled and
-        # pruning falls back to the conservative multi-spec check.
-        spec_id = (
-            mmeta.get("partition-spec-id")
-            if mmeta.get("spec-id-exact") == "true" else None
-        )
-        for mrow in mrows:
-            rec = dict(zip(mnames, mrow))
-            entry = data_file_to_entry(
-                rec["data_file"], rec["sequence_number"], table_schema,
-                partition_typed=typed_part,
-                partition_transforms_map=tmap,
-            )
-            if entry.get("partition") is not None:
-                if spec_id is not None:
-                    entry["spec-id"] = int(spec_id)
-                else:
-                    # carried through a future rewrite, this entry must land
-                    # in an UNFLAGGED manifest (its true encoding spec is
-                    # unknowable); without the marker the writer would
-                    # relabel it with the then-current spec in a trusted
-                    # header and exact pruning could drop live files
-                    entry["spec-id-unknown"] = True
-            entries.append(entry)
-    return entries
+        if entry.get("partition") is not None:
+            entry["spec-id"] = spec_id
+        out.append((rec["status"], rec["snapshot_id"], entry))
+    return out
+
+
+def read_manifest_list(list_location: str) -> list[dict]:
+    """A snapshot's `manifest-list` location → the flat internal entry
+    dicts of all its manifests (the shape the whole data plane consumes)."""
+    return [
+        entry
+        for mf in read_manifest_files(list_location)
+        for _status, _snapshot_id, entry in read_manifest(mf["manifest_path"])
+    ]

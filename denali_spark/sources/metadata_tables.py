@@ -60,6 +60,7 @@ from pyspark.sql.types import (
 )
 
 from denali_spark.catalog.metadata import _fs_path
+from denali_spark.sources import manifests
 
 KINDS = (
     "snapshots", "history", "metadata_log_entries", "refs", "manifests",
@@ -153,22 +154,18 @@ _FILE_COLS = [f.name for f in _ENTRY_FILE_FIELDS]
 
 
 def _decode_manifest_rows(path: str) -> Iterator[dict]:
-    """One manifest Avro (or a legacy whole-list JSON doc) → flat entry
-    dicts matching _ENTRIES_FLAT_SCHEMA. Pure Python; runs on executors."""
-    from denali_spark.sources.manifests import (
-        CONTENT_TO_INT, data_file_to_entry,
-    )
-
-    def flat(e: dict, status: int, snapshot_id: int | None) -> dict:
+    """One manifest Avro → flat entry dicts matching _ENTRIES_FLAT_SCHEMA.
+    Pure Python; runs on executors."""
+    for status, snapshot_id, e in manifests.read_manifest(path):
         stats = e.get("stats") or {}
         part = e.get("partition")
         seq = e.get("sequence-number")
-        return {
+        yield {
             "status": status,
             "snapshot_id": snapshot_id,
             "sequence_number": seq,
             "file_sequence_number": seq,
-            "content": CONTENT_TO_INT[e.get("content", "data")],
+            "content": manifests.CONTENT_TO_INT[e.get("content", "data")],
             "file_path": e["path"],
             "file_format": e.get("file-format", "parquet").upper(),
             "record_count": e.get("record-count"),
@@ -189,34 +186,6 @@ def _decode_manifest_rows(path: str) -> Iterator[dict]:
             "equality_ids": e.get("equality-field-ids"),
             "first_row_id": e.get("first-row-id"),
         }
-
-    if path.endswith(".json"):  # legacy round-3 single-document layout
-        with open(path) as f:
-            doc = json.load(f)
-        for e in doc["files"]:
-            yield flat(e, 1, doc.get("snapshot-id"))
-        return
-
-    from denali_spark.sources.avro_ocf import read_ocf_with_meta
-
-    from denali_spark.sources.manifests import (
-        _partition_is_typed,
-        partition_transforms,
-    )
-
-    mschema, mrows, mmeta = read_ocf_with_meta(path)
-    table_schema = json.loads(mmeta["schema"]) if "schema" in mmeta else None
-    typed_part = _partition_is_typed(mschema)
-    tmap = partition_transforms(json.loads(mmeta.get("partition-spec", "[]")))
-    names = [f["name"] for f in mschema["fields"]]
-    for mrow in mrows:
-        rec = dict(zip(names, mrow))
-        e = data_file_to_entry(
-            rec["data_file"], rec["sequence_number"], table_schema,
-            partition_typed=typed_part,
-            partition_transforms_map=tmap,
-        )
-        yield flat(e, rec["status"], rec["snapshot_id"])
 
 
 def _entries_df(io, manifest_paths: list[str]) -> DataFrame:
@@ -242,30 +211,12 @@ def _entries_df(io, manifest_paths: list[str]) -> DataFrame:
     return paths_df.mapInPandas(kernel, schema=_ENTRIES_FLAT_SCHEMA)
 
 
-def _manifest_list_rows(md: dict, snap: dict) -> list[dict]:
-    """manifest-list location → _MANIFESTS_SCHEMA row dicts (driver-side;
-    a manifest list is O(#manifests), small by construction)."""
-    from denali_spark.sources.avro_ocf import read_ocf
-
-    loc = _fs_path(snap["manifest-list"])
-    if loc.endswith(".json"):  # legacy layout: the list IS the one manifest
-        with open(loc) as f:
-            n = len(json.load(f)["files"])
-        return [{
-            "content": 0, "path": loc, "length": os.path.getsize(loc),
-            "partition_spec_id": md.get("default-spec-id", 0),
-            "added_snapshot_id": snap["snapshot-id"],
-            "added_data_files_count": n, "existing_data_files_count": 0,
-            "deleted_data_files_count": 0, "added_rows_count": 0,
-            "sequence_number": snap.get("sequence-number", 0),
-            "min_sequence_number": snap.get("sequence-number", 0),
-        }]
-    schema, rows = read_ocf(loc)
-    names = [f["name"] for f in schema["fields"]]
-    out = []
-    for row in rows:
-        mf = dict(zip(names, row))
-        out.append({
+def _manifest_list_rows(snap: dict) -> list[dict]:
+    """A snapshot's manifest list → _MANIFESTS_SCHEMA row dicts
+    (driver-side; a manifest list is O(#manifests), small by
+    construction)."""
+    return [
+        {
             "content": mf["content"],
             "path": mf["manifest_path"],
             "length": mf["manifest_length"],
@@ -277,8 +228,9 @@ def _manifest_list_rows(md: dict, snap: dict) -> list[dict]:
             "added_rows_count": mf["added_rows_count"],
             "sequence_number": mf["sequence_number"],
             "min_sequence_number": mf["min_sequence_number"],
-        })
-    return out
+        }
+        for mf in manifests.read_manifest_files(snap["manifest-list"])
+    ]
 
 
 def _ts(ms: int):
@@ -404,7 +356,7 @@ def metadata_table(
     if kind == "all_manifests":
         rows = []
         for s in md.get("snapshots", []):
-            for m in _manifest_list_rows(md, s):
+            for m in _manifest_list_rows(s):
                 rows.append({**m, "reference_snapshot_id": s["snapshot-id"]})
         schema = StructType(
             [*_MANIFESTS_SCHEMA.fields,
@@ -418,7 +370,7 @@ def metadata_table(
         paths: list[str] = []
         seen: set[str] = set()
         for s in md.get("snapshots", []):
-            for m in _manifest_list_rows(md, s):
+            for m in _manifest_list_rows(s):
                 if m["path"] not in seen:
                     seen.add(m["path"])
                     paths.append(m["path"])
@@ -443,7 +395,7 @@ def metadata_table(
         pd_schema = "file_path string, pos long, delete_file_path string"
         if snap is None:
             return spark.createDataFrame([], pd_schema)
-        _, deletes = split_entries(io._manifest_entries(snap["manifest-list"]))
+        _, deletes = split_entries(manifests.read_manifest_list(snap["manifest-list"]))
         pos = [e for e in deletes if e.get("content") == "position-deletes"]
         pq = [e for e in pos if e.get("file-format", "parquet") == "parquet"]
         dvs = [e for e in pos if e.get("file-format") == "puffin"]
@@ -472,7 +424,7 @@ def metadata_table(
             spark.createDataFrame([], schema=_ENTRIES_FLAT_SCHEMA), kind
         )
 
-    mrows = _manifest_list_rows(md, snap)
+    mrows = _manifest_list_rows(snap)
     if kind == "manifests":
         return spark.createDataFrame(
             [tuple(m[f.name] for f in _MANIFESTS_SCHEMA.fields) for m in mrows],

@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from denali_spark.catalog.metadata import _fs_path
+from denali_spark.sources import manifests
 from denali_spark.sources.catalog_io import (
     LINEAGE_FILE,
     LINEAGE_POS,
@@ -110,7 +111,9 @@ def delete_where_mor(
         # kernels the read path applies deletes with, so positions always
         # agree between writer and reader.
         snap = io._resolve_snapshot(md, parent_id)
-        _data, prior_deletes = split_entries(io._manifest_entries(snap["manifest-list"]))
+        _data, prior_deletes = split_entries(
+            manifests.read_manifest_list(snap["manifest-list"])
+        )
         df = io._read_reconciled(md, snap, candidates, with_lineage=True)
         if prior_deletes:
             # Don't re-delete rows a prior delete already covers (dup rows
@@ -316,7 +319,9 @@ def delete_where_dv(
         if not candidates:
             return {"metadata": md, "noop": True}
         snap = io._resolve_snapshot(md, parent_id)
-        _data, prior_deletes = split_entries(io._manifest_entries(snap["manifest-list"]))
+        _data, prior_deletes = split_entries(
+            manifests.read_manifest_list(snap["manifest-list"])
+        )
         df = io._read_reconciled(md, snap, candidates, with_lineage=True)
         if prior_deletes:
             df = io._apply_deletes(
@@ -401,7 +406,9 @@ def update_where_mor(
         if not candidates:
             return {"metadata": md, "noop": True}
         snap = io._resolve_snapshot(md, parent_id)
-        _data, prior_deletes = split_entries(io._manifest_entries(snap["manifest-list"]))
+        _data, prior_deletes = split_entries(
+            manifests.read_manifest_list(snap["manifest-list"])
+        )
         df = io._read_reconciled(md, snap, candidates, with_lineage=True)
         if prior_deletes:
             df = io._apply_deletes(
@@ -479,7 +486,7 @@ def merge_into_mor(
         md, parent_id, candidates, untouched = _plan(io, namespace, name, prune)
         snap = io._resolve_snapshot(md, parent_id) if parent_id else None
         prior_deletes = (
-            split_entries(io._manifest_entries(snap["manifest-list"]))[1]
+            split_entries(manifests.read_manifest_list(snap["manifest-list"]))[1]
             if snap else []
         )
         matched = None

@@ -279,46 +279,32 @@ def partition_prune(
     values encode under DIFFERENT transforms, and pruning with only the
     current spec would silently drop live old-layout files (id=37 lives
     in bucket 5 of 8 but 13 of 16). Manifests are written split per
-    spec-id with the header recording the encoding spec (r11), and the
-    reader reattaches it per entry — those entries prune EXACTLY against
-    their own spec. Entries without a recorded spec (legacy manifests,
-    spec-pure plan reconstruction) fall back to the conservative check:
-    every spec whose field-name set could have produced the tuple, kept
-    unless all candidates prove impossibility — never row-dropping."""
+    spec-id with the header recording the encoding spec, and the reader
+    labels every partitioned entry with it (`spec-id`), so each entry
+    prunes exactly against its own spec. An entry that cannot be
+    attributed to a partitioned spec is kept, never pruned. Only the
+    spec's manifest layout is read; tables written before round 7 are not
+    readable and have no migration."""
     from denali_spark.sources.expressions import normalize
 
-    specs = [s for s in md.get("partition-specs", []) if s.get("fields")]
-    if not specs:
-        return entries
     by_id = {}
     sid = md.get("current-schema-id", 0)
     for s in md.get("schemas", []):
         if s.get("schema-id") == sid:
             by_id = {f["id"]: f["name"] for f in s.get("fields", [])}
-    # per spec: field-name set + source column → [(field name, transform,
-    # col type)]; dedup identical layouts (the common no-evolution case
-    # collapses back to a single map)
-    spec_maps: list[tuple[frozenset, dict]] = []
+    # per spec-id: source column → [(field name, transform, col type)]
     by_spec_id: dict[int, dict] = {}
-    seen_layouts = set()
-    for s in specs:
-        fnames = frozenset(f["name"] for f in s.get("fields", []))
+    for s in md.get("partition-specs", []):
         per_col: dict[str, list[tuple[str, str, str | None]]] = {}
-        for f in s["fields"]:
+        for f in s.get("fields", []):
             col = by_id.get(f["source-id"])
             if col is not None:
                 per_col.setdefault(col, []).append(
                     (f["name"], f["transform"], _iceberg_type_of(md, col))
                 )
-        by_spec_id[s.get("spec-id", 0)] = per_col
-        layout = tuple(
-            sorted((f["name"], f["transform"], f["source-id"]) for f in s["fields"])
-        )
-        if layout in seen_layouts:
-            continue
-        seen_layouts.add(layout)
-        spec_maps.append((fnames, per_col))
-    if not any(pc for _, pc in spec_maps):
+        if per_col:
+            by_spec_id[s.get("spec-id", 0)] = per_col
+    if not by_spec_id:
         return entries
     enc_cache: dict[tuple, object] = {}
 
@@ -370,25 +356,8 @@ def partition_prune(
     out = []
     for e in entries:
         part = e.get("partition")
-        if not part:
-            out.append(e)
-            continue
-        keys = set(part)
-        # EXACT path: the entry knows which spec encoded its tuple (the
-        # manifest header's spec-id, reattached on read — manifests are
-        # written split per spec-id), so prune against exactly that spec
-        sid = e.get("spec-id")
-        if sid is not None and sid in by_spec_id and by_spec_id[sid]:
-            if might(flt, part, by_spec_id[sid]):
-                out.append(e)
-            continue
-        # CONSERVATIVE path (entries with no recorded spec — legacy
-        # manifests, spec-pure server plans without the field): every spec
-        # this tuple could have been written under (its keys all exist in
-        # the spec; strictly-older specs with missing fields are excluded,
-        # so added-field evolution still prunes new files fully)
-        cands = [pc for fn, pc in spec_maps if keys <= fn and pc]
-        if not cands or any(might(flt, part, pc) for pc in cands):
+        per_col = by_spec_id.get(e.get("spec-id"))
+        if not part or per_col is None or might(flt, part, per_col):
             out.append(e)
     return out
 

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DataType
 
 from denali_spark.catalog.client import CatalogHTTPError
+from denali_spark.sources import manifests
 from denali_spark.sources.catalog_io import (
     LINEAGE_FILE,
     LINEAGE_POS,
@@ -121,7 +122,7 @@ def _plan(io: SparkCatalogIO, namespace: list[str], name: str, where: dict | Non
     if parent_id is None:
         return md, None, [], []
     snap = io._resolve_snapshot(md, parent_id)
-    data, deletes = split_entries(io._manifest_entries(snap["manifest-list"]))
+    data, deletes = split_entries(manifests.read_manifest_list(snap["manifest-list"]))
     if where is None:
         return md, parent_id, data, deletes
     candidates = [e for e in data if file_might_match(where, e.get("stats"))]
@@ -136,7 +137,7 @@ def _read_candidates(io: SparkCatalogIO, md: dict, parent_id: int, candidates):
     the CURRENT schema. Pending merge-on-read deletes are applied first —
     a copy-on-write rewrite must not resurrect rows they removed."""
     snap = io._resolve_snapshot(md, parent_id)
-    _data, deletes = split_entries(io._manifest_entries(snap["manifest-list"]))
+    _data, deletes = split_entries(manifests.read_manifest_list(snap["manifest-list"]))
     if not deletes:
         return io._read_reconciled(md, snap, candidates)
     from denali_spark.sources.schema_evolution import current_schema

@@ -27,6 +27,7 @@ from denali_spark.sources import (
 )
 from denali_spark.sources import expressions as E
 from denali_spark.sources.catalog_io import split_entries
+from denali_spark.sources.manifests import read_manifest_list
 from denali_spark.sources.puffin import read_dv_positions
 
 spark = get_spark("deletion-vectors")
@@ -48,7 +49,7 @@ for k in range(4):
 def delete_side():
     md = io.client.load_table(ns, name)["metadata"]
     snap = io._resolve_snapshot(md)
-    return split_entries(io._manifest_entries(snap["manifest-list"]))[1]
+    return split_entries(read_manifest_list(snap["manifest-list"]))[1]
 
 
 # 1. a trickle of DV deletes: each commit REPLACES the touched file's vector

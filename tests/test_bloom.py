@@ -16,6 +16,7 @@ from denali_spark.sources.bloom import (
     build_bloom,
     conjunctive_eqs,
 )
+from denali_spark.sources.manifests import read_manifest_list
 
 
 # --- kernel level -----------------------------------------------------------
@@ -212,7 +213,7 @@ def test_run_maintenance_pipeline(spark, io):
     md = io.client.load_table(ns, "t")["metadata"]
     assert len(md["snapshots"]) == 1
     snap = io._resolve_snapshot(md)
-    data, deletes = split_entries(io._manifest_entries(snap["manifest-list"]))
+    data, deletes = split_entries(read_manifest_list(snap["manifest-list"]))
     assert deletes == [] and len(data) == 1  # folded + compacted
     assert io.read_table(ns, "t").count() == 90
 

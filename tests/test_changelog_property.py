@@ -32,14 +32,7 @@ from denali_spark.sources import (
     read_changes,
 )
 from denali_spark.sources import expressions as E
-
-
-def _EX(default):
-    """Example budget: DENALI_FUZZ_SCALE multiplies every fuzzer's default
-    (deep one-off sessions set it to 5-10x; CI keeps 1x suite cost)."""
-    import os
-
-    return max(1, int(default * float(os.environ.get("DENALI_FUZZ_SCALE", "1"))))
+from tests.fuzz_budget import examples
 
 
 _SEQ = itertools.count()
@@ -107,7 +100,7 @@ def _state(io, t, snap):
 @given(ops=_ops, seed_width=st.integers(min_value=3, max_value=50),
        wa=st.integers(min_value=0, max_value=11),
        wb=st.integers(min_value=0, max_value=11))
-@settings(max_examples=_EX(5), deadline=None,
+@settings(max_examples=examples(5), deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_windowed_changelog_reconstructs_state(spark, io, ops, seed_width,
                                                wa, wb):

@@ -31,6 +31,7 @@ from denali_spark.sources import (
     update_where,
 )
 from denali_spark.sources import expressions as E
+from denali_spark.sources.manifests import read_manifest_list
 
 
 @pytest.fixture()
@@ -318,7 +319,7 @@ def test_mor_delete_lands_mid_compaction(spark, io_a, io_b):
     snap = next(s for s in md["snapshots"]
                 if s["snapshot-id"] == md["refs"]["main"]["snapshot-id"])
     from denali_spark.sources.catalog_io import split_entries
-    data, deletes = split_entries(io_a._manifest_entries(snap["manifest-list"]))
+    data, deletes = split_entries(read_manifest_list(snap["manifest-list"]))
     assert len(data) == 1 and not deletes
 
 

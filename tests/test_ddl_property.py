@@ -18,14 +18,7 @@ from hypothesis import strategies as st
 
 from denali_spark.catalog import CatalogServer, make_state
 from denali_spark.sources import SparkCatalogIO
-
-
-def _EX(default):
-    """Example budget: DENALI_FUZZ_SCALE multiplies every fuzzer's default
-    (deep one-off sessions set it to 5-10x; CI keeps 1x suite cost)."""
-    import os
-
-    return max(1, int(default * float(os.environ.get("DENALI_FUZZ_SCALE", "1"))))
+from tests.fuzz_budget import examples
 
 
 _TYPES = [
@@ -101,7 +94,7 @@ _counter = [0]
 
 
 @settings(
-    max_examples=_EX(15), deadline=None,
+    max_examples=examples(15), deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(_table_defs())

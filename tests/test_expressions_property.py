@@ -14,6 +14,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from denali_spark.sources import expressions as E
+from tests.fuzz_budget import examples
 
 COLS = ["a", "b"]
 
@@ -134,7 +135,7 @@ def _eval(expr: dict, row: dict):
     return _eval_leaf(expr, row)
 
 
-@settings(max_examples=400, deadline=None)
+@settings(max_examples=examples(400), deadline=None)
 @given(expr=exprs(), file_rows=rows())
 def test_pruner_never_drops_a_matching_file(expr, file_rows):
     """THE safety property: pruned file ⇒ no row matches (SQL TRUE)."""
@@ -146,7 +147,7 @@ def test_pruner_never_drops_a_matching_file(expr, file_rows):
             )
 
 
-@settings(max_examples=200, deadline=None)
+@settings(max_examples=examples(200), deadline=None)
 @given(expr=exprs())
 def test_normalize_preserves_semantics(expr):
     """normalize() (De Morgan push-down) must not change row-level truth."""
@@ -159,7 +160,7 @@ def test_normalize_preserves_semantics(expr):
         assert _eval(expr, row) == _eval(norm, row)
 
 
-@settings(max_examples=200, deadline=None)
+@settings(max_examples=examples(200), deadline=None)
 @given(expr=exprs())
 def test_to_spark_sql_total(expr):
     """Lowering to SQL never crashes and always yields a non-empty string."""

@@ -19,6 +19,7 @@ from denali_spark.sources import (
 )
 from denali_spark.sources import expressions as E
 from denali_spark.sources.catalog_io import split_entries
+from denali_spark.sources.manifests import read_manifest_list
 
 
 @pytest.fixture()
@@ -37,7 +38,7 @@ def _df(spark, lo=0, hi=50):
 def _entries(io, ns, name):
     md = io.client.load_table(ns, name)["metadata"]
     snap = io._resolve_snapshot(md)
-    return io._manifest_entries(snap["manifest-list"])
+    return read_manifest_list(snap["manifest-list"])
 
 
 def test_orc_round_trip_and_property(spark, io):

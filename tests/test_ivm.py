@@ -22,6 +22,7 @@ from denali_spark.sources import (
 )
 from denali_spark.sources import expressions as E
 from denali_spark.sources.ivm import WATERMARK_KEY, _aggregate_full
+from denali_spark.sources.manifests import read_manifest_list
 
 
 @pytest.fixture()
@@ -178,7 +179,7 @@ def test_refresh_prunes_untouched_files(spark, io):
     md = io.client.load_table(["ivm"], "facts_by_k")["metadata"]
     ref = md["refs"]["main"]
     snap = next(s for s in md["snapshots"] if s["snapshot-id"] == ref["snapshot-id"])
-    n_files = len(io._manifest_entries(snap["manifest-list"]))
+    n_files = len(read_manifest_list(snap["manifest-list"]))
 
     delta = spark.createDataFrame(
         [(10_000 + i, 90 + (i % 5)) for i in range(20)], "id long, k long"

@@ -29,14 +29,7 @@ from pyspark.sql import functions as F
 from denali_spark.catalog import CatalogServer, make_state
 from denali_spark.sources import SparkCatalogIO, delete_where
 from denali_spark.sources import expressions as E
-
-
-def _EX(default):
-    """Example budget: DENALI_FUZZ_SCALE multiplies every fuzzer's default
-    (deep one-off sessions set it to 5-10x; CI keeps 1x suite cost)."""
-    import os
-
-    return max(1, int(default * float(os.environ.get("DENALI_FUZZ_SCALE", "1"))))
+from tests.fuzz_budget import examples
 
 
 _SEQ = itertools.count()
@@ -126,7 +119,7 @@ def _apply(spark, io, facts, dims, mv, op):
 @given(ops=_ops,
        labels=st.lists(st.sampled_from(REGIONS), min_size=5, max_size=5),
        seed_width=st.integers(min_value=5, max_value=120))
-@settings(max_examples=_EX(4), deadline=None,
+@settings(max_examples=examples(4), deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_join_view_state_equals_recompute(spark, io, ops, labels, seed_width):
     i = next(_SEQ)

@@ -30,14 +30,7 @@ from pyspark.sql import functions as F
 from denali_spark.catalog import CatalogServer, make_state
 from denali_spark.sources import SparkCatalogIO, delete_where
 from denali_spark.sources import expressions as E
-
-
-def _EX(default):
-    """Example budget: DENALI_FUZZ_SCALE multiplies every fuzzer's default
-    (deep one-off sessions set it to 5-10x; CI keeps 1x suite cost)."""
-    import os
-
-    return max(1, int(default * float(os.environ.get("DENALI_FUZZ_SCALE", "1"))))
+from tests.fuzz_budget import examples
 
 
 _SEQ = itertools.count()
@@ -107,7 +100,7 @@ def _apply(spark, io, tbl, mv, op):
 @given(ops=_ops,
        where=st.sampled_from([None, "id >= 10", "k < 4"]),
        seed_width=st.integers(min_value=5, max_value=120))
-@settings(max_examples=_EX(5), deadline=None,
+@settings(max_examples=examples(5), deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_maintained_state_equals_recompute(spark, io, ops, where, seed_width):
     i = next(_SEQ)

@@ -12,6 +12,7 @@ from hypothesis import strategies as st
 
 from denali_spark.operators.timeseries import _lttb_select
 from denali_spark.streaming.events_stream import _cents
+from tests.fuzz_budget import examples
 
 
 @st.composite
@@ -38,7 +39,7 @@ def series(draw):
 
 
 @given(series(), st.integers(min_value=2, max_value=120))
-@settings(max_examples=150, deadline=None)
+@settings(max_examples=examples(150), deadline=None)
 def test_lttb_invariants(sv, n_out):
     ts, vals = sv
     idx = _lttb_select(ts, vals, n_out)
@@ -60,7 +61,7 @@ def test_lttb_invariants(sv, n_out):
 
 
 @given(st.floats(min_value=-1e9, max_value=1e9, allow_nan=False, allow_infinity=False))
-@settings(max_examples=300, deadline=None)
+@settings(max_examples=examples(300), deadline=None)
 def test_cents_matches_decimal_cast_semantics(v):
     """_cents must equal Java BigDecimal(double).setScale(2, HALF_UP) — i.e.
     HALF_UP on the EXACT binary expansion of the double, not on its decimal
@@ -102,7 +103,7 @@ def test_lttb_flat_series_ties_deterministic():
         max_size=3000,
     )
 )
-@settings(max_examples=60, deadline=None)
+@settings(max_examples=examples(60), deadline=None)
 def test_roaring64_roundtrip_property(vals):
     from denali_spark.sources.puffin import (
         deserialize_roaring64,
@@ -115,7 +116,7 @@ def test_roaring64_roundtrip_property(vals):
 @given(
     st.lists(st.integers(min_value=0, max_value=2**33), max_size=1500),
 )
-@settings(max_examples=40, deadline=None)
+@settings(max_examples=examples(40), deadline=None)
 def test_dv_blob_roundtrip_property(vals):
     from denali_spark.sources.puffin import decode_dv_blob, encode_dv_blob
 
@@ -125,7 +126,7 @@ def test_dv_blob_roundtrip_property(vals):
 
 
 @given(st.integers(min_value=4090, max_value=4100))
-@settings(max_examples=11, deadline=None)
+@settings(max_examples=examples(11), deadline=None)
 def test_roaring_container_boundary(card):
     """The array→bitmap container switch at cardinality 4096 must be
     seamless in both directions."""

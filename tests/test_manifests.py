@@ -3,9 +3,8 @@ VERDICT item 7; round-4 VERDICT item 4): the two-level manifest-list →
 manifest → entry layout must reproduce the internal entry dicts exactly,
 including stats, partitions, MoR delete metadata, and sequence numbers.
 With a table schema, bounds round-trip through Iceberg's field-id-keyed
-binary single-value serialization; without one they fall back to
-name-keyed JSON — and legacy JSON lists must stay readable through the
-same read path."""
+binary single-value serialization; stats of columns outside the schema
+fall back to name-keyed JSON fields."""
 
 from __future__ import annotations
 
@@ -243,82 +242,6 @@ def test_single_entry_mapping_is_spec_shaped():
     ]
 
 
-def test_legacy_round4_avro_manifest_still_reads(tmp_path):
-    """Round-4 manifests carried name-keyed string-map bounds in
-    lower_bounds/upper_bounds; they decode through their own embedded
-    schema and must keep reading after the id-keyed change."""
-    from denali_spark.sources.avro_ocf import write_ocf
-
-    str_map = {"type": "map", "values": "string"}
-    long_map = {"type": "map", "values": "long"}
-    legacy_df_schema = {
-        "type": "record",
-        "name": "r2",
-        "fields": [
-            {"name": "content", "type": "int"},
-            {"name": "file_path", "type": "string"},
-            {"name": "file_format", "type": "string"},
-            {"name": "partition", "type": ["null", str_map]},
-            {"name": "record_count", "type": ["null", "long"]},
-            {"name": "file_size_in_bytes", "type": "long"},
-            {"name": "null_value_counts", "type": ["null", long_map]},
-            {"name": "lower_bounds", "type": ["null", str_map]},
-            {"name": "upper_bounds", "type": ["null", str_map]},
-            {"name": "equality_ids", "type": ["null", {"type": "array", "items": "int"}]},
-            {"name": "x_schema_id", "type": ["null", "int"]},
-            {"name": "x_equality_columns",
-             "type": ["null", {"type": "array", "items": "string"}]},
-        ],
-    }
-    legacy_entry_schema = {
-        "type": "record",
-        "name": "manifest_entry",
-        "fields": [
-            {"name": "status", "type": "int"},
-            {"name": "snapshot_id", "type": ["null", "long"]},
-            {"name": "sequence_number", "type": ["null", "long"]},
-            {"name": "file_sequence_number", "type": ["null", "long"]},
-            {"name": "data_file", "type": legacy_df_schema},
-        ],
-    }
-    mpath = str(tmp_path / "legacy-m0.avro")
-    df_rec = {
-        "content": 0,
-        "file_path": "/wh/t/data/a.parquet",
-        "file_format": "PARQUET",
-        "partition": None,
-        "record_count": 100,
-        "file_size_in_bytes": 2048,
-        "null_value_counts": {"id": 0},
-        "lower_bounds": {"id": "1"},
-        "upper_bounds": {"id": "100"},
-        "equality_ids": None,
-        "x_schema_id": None,
-        "x_equality_columns": None,
-    }
-    write_ocf(mpath, legacy_entry_schema, [(1, 777, 3, 3, df_rec)])
-    lpath = str(tmp_path / "snap-777.manifest-list.avro")
-    mf = (mpath, os.path.getsize(mpath), 0, 0, 3, 3, 777, 1, 0, 0, 100, 0, 0)
-    from denali_spark.sources.manifests import MANIFEST_FILE_SCHEMA
-
-    write_ocf(lpath, MANIFEST_FILE_SCHEMA, [mf])
-    [entry] = read_manifest_list(lpath)
-    assert entry["path"] == "/wh/t/data/a.parquet"
-    assert entry["stats"] == {"id": {"min": 1, "max": 100, "null-count": 0}}
-    assert entry["sequence-number"] == 3
-
-
-def test_legacy_json_manifest_list_still_reads(tmp_path):
-    from denali_spark.sources.catalog_io import SparkCatalogIO
-
-    path = str(tmp_path / "snap-1.manifest-list.json")
-    with open(path, "w") as f:
-        json.dump({"manifest-format": "json", "files": [dict(e) for e in ENTRIES]}, f)
-    io = SparkCatalogIO.__new__(SparkCatalogIO)
-    got = io._manifest_entries(path)
-    assert got == [dict(e) for e in ENTRIES]
-
-
 def test_data_file_paths_are_uris_in_avro():
     """Manifests carry file:// URIs (Iceberg convention); the read adapter
     hands plain local paths back to the engine."""
@@ -388,95 +311,12 @@ def test_r102_time_transform_values_are_spec_integers(tmp_path):
         assert spec_int_to_readable(tr, -1) == v
 
 
-def test_unlabeled_carried_entries_stay_conservative(tmp_path):
-    """r11-ADVICE-high regression: an entry carried from a PRE-SPLIT
-    manifest (no spec-id-exact header) must NOT be relabeled with the
-    current spec inside a trusted header on rewrite — after a
-    transform-width evolution (bucket[8]->bucket[16]) exact pruning
-    against the wrong spec would silently drop live files. The reader
-    marks such entries spec-id-unknown; the writer routes them into an
-    UNFLAGGED manifest so they stay on the conservative pruning path."""
-    from denali_spark.sources.avro_ocf import read_ocf, read_ocf_with_meta, write_ocf
-    from denali_spark.sources.manifests import MANIFEST_FILE_SCHEMA
-
-    schema = {
-        "type": "struct", "schema-id": 0,
-        "fields": [{"id": 1, "name": "id", "required": True, "type": "long"}],
-    }
-    spec8 = [{"name": "id_bucket", "transform": "bucket[8]",
-              "source-id": 1, "field-id": 1000}]
-    spec16 = [{"name": "id_bucket", "transform": "bucket[16]",
-               "source-id": 1, "field-id": 1000}]
-    old_entry = {
-        "path": "/wh/t/data/old.parquet", "file-format": "parquet",
-        "record-count": 10, "file-size-bytes": 100, "sequence-number": 1,
-        "partition": {"id_bucket": 5},
-    }
-    # 1) Simulate a pre-split manifest: write normally (spec 0 =
-    #    bucket[8]), then rewrite the manifest header WITHOUT the
-    #    spec-id-exact flag (what pre-r11 writers produced).
-    loc = write_manifest_list(
-        str(tmp_path / "m1"), 1, [dict(old_entry)],
-        schema=schema, partition_spec=spec8, partition_spec_id=0,
-    )
-    lschema, lrows = read_ocf(loc)
-    lnames = [f["name"] for f in lschema["fields"]]
-    mf = dict(zip(lnames, lrows[0]))
-    mschema, mrows, mmeta = read_ocf_with_meta(mf["manifest_path"])
-    legacy_meta = {k: v for k, v in mmeta.items() if k != "spec-id-exact"}
-    write_ocf(mf["manifest_path"], mschema, mrows, extra_meta=legacy_meta)
-    # 2) Read: entry must come back WITHOUT a spec-id, marked unknown.
-    [carried] = read_manifest_list(loc)
-    assert "spec-id" not in carried
-    assert carried.get("spec-id-unknown") is True
-    # 3) Rewrite (spec evolved to bucket[16], current spec-id=1) together
-    #    with a fresh file written under the new spec.
-    fresh = {
-        "path": "/wh/t/data/new.parquet", "file-format": "parquet",
-        "record-count": 10, "file-size-bytes": 100, "sequence-number": 2,
-        "partition": {"id_bucket": 13},
-    }
-    all_specs = [
-        {"spec-id": 0, "fields": spec8},
-        {"spec-id": 1, "fields": spec16},
-    ]
-    loc2 = write_manifest_list(
-        str(tmp_path / "m2"), 2, [carried, dict(fresh)],
-        schema=schema, partition_spec=spec16, partition_spec_id=1,
-        all_specs=all_specs,
-    )
-    # 4) The carried entry's manifest is NOT flagged exact; the fresh
-    #    entry's manifest IS (and is keyed by the current spec).
-    lschema2, lrows2 = read_ocf(loc2)
-    lnames2 = [f["name"] for f in lschema2["fields"]]
-    flags = {}
-    for row in lrows2:
-        mf2 = dict(zip(lnames2, row))
-        _, mrows2, meta2 = read_ocf_with_meta(mf2["manifest_path"])
-        for r in mrows2:
-            path = r[-1]["file_path"]
-            flags[path] = (meta2.get("spec-id-exact"),
-                           meta2.get("partition-spec-id"))
-    assert flags["file:///wh/t/data/old.parquet"][0] != "true"
-    assert flags["file:///wh/t/data/new.parquet"] == ("true", "1")
-    # 5) End-to-end: a point lookup must keep the old-layout file.
-    #    id=37 -> bucket[16]=13 (fresh kept exactly); the old bucket[8]
-    #    tuple 5 must survive via the conservative path even though 5 is
-    #    not 37's bucket under the CURRENT spec.
-    back = read_manifest_list(loc2)
-    by_path = {e["path"]: e for e in back}
-    assert by_path["/wh/t/data/old.parquet"].get("spec-id") is None
-    assert by_path["/wh/t/data/old.parquet"].get("spec-id-unknown") is True
-    assert by_path["/wh/t/data/new.parquet"]["spec-id"] == 1
-
-
 def test_spec_labeling_properties(tmp_path):
-    """Property test (r12): for ANY mix of explicitly-labeled, unknown-
-    marked, and fresh entries, write_manifest_list must (a) place every
-    entry in exactly one manifest, (b) set spec-id-exact=true ONLY on
-    manifests whose entries were explicitly labeled or freshly written
-    under the current spec, (c) round-trip labels/markers so a second
-    rewrite preserves the conservative/exact split."""
+    """Property test (r12): for ANY mix of explicitly-labeled and fresh
+    entries, write_manifest_list must (a) place every entry in exactly one
+    manifest, (b) record in each manifest's header the spec its entries
+    were labeled with, or the current spec for fresh entries, (c)
+    round-trip the labels so a second rewrite keeps the same split."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -493,7 +333,7 @@ def test_spec_labeling_properties(tmp_path):
     all_specs = [{"spec-id": 0, "fields": spec8},
                  {"spec-id": 1, "fields": spec16}]
 
-    entry_kind = st.sampled_from(["fresh", "unknown", "spec0", "spec1"])
+    entry_kind = st.sampled_from(["fresh", "spec0", "spec1"])
 
     @settings(max_examples=25, deadline=None)
     @given(st.lists(entry_kind, min_size=1, max_size=12))
@@ -505,9 +345,7 @@ def test_spec_labeling_properties(tmp_path):
                 "record-count": 1, "file-size-bytes": 10,
                 "sequence-number": 1, "partition": {"id_bucket": i % 8},
             }
-            if kind == "unknown":
-                e["spec-id-unknown"] = True
-            elif kind == "spec0":
+            if kind == "spec0":
                 e["spec-id"] = 0
             elif kind == "spec1":
                 e["spec-id"] = 1
@@ -527,27 +365,22 @@ def test_spec_labeling_properties(tmp_path):
             for r in mrows:
                 path = r[-1]["file_path"]
                 assert path not in seen, "entry in two manifests"
-                seen[path] = (meta.get("spec-id-exact"),
-                              int(meta.get("partition-spec-id")))
+                seen[path] = int(meta.get("partition-spec-id"))
         assert len(seen) == len(entries)  # (a) exactly-one placement
         for i, (kind, _) in enumerate(entries):
-            exact, sid = seen[f"file:///wh/t/data/f{i}.parquet"]
-            if kind == "unknown":
-                assert exact != "true"  # (b) conservative stays unflagged
-            elif kind == "fresh":
-                assert (exact, sid) == ("true", 1)  # current spec, trusted
+            sid = seen[f"file:///wh/t/data/f{i}.parquet"]
+            if kind == "fresh":
+                assert sid == 1  # (b) current spec
             elif kind == "spec0":
-                assert (exact, sid) == ("true", 0)
+                assert sid == 0
             else:
-                assert (exact, sid) == ("true", 1)
-        # (c) round-trip: labels/markers reproduce the same split
+                assert sid == 1
+        # (c) round-trip: labels reproduce the same split
         back = read_manifest_list(loc)
         by_path = {e["path"]: e for e in back}
         for i, (kind, _) in enumerate(entries):
             e = by_path[f"/wh/t/data/f{i}.parquet"]
-            if kind == "unknown":
-                assert e.get("spec-id") is None and e.get("spec-id-unknown")
-            elif kind == "spec0":
+            if kind == "spec0":
                 assert e.get("spec-id") == 0
             else:  # fresh entries come back labeled with the current spec
                 assert e.get("spec-id") == 1

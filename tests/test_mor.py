@@ -21,6 +21,7 @@ from denali_spark.sources import (
 )
 from denali_spark.sources import expressions as E
 from denali_spark.sources.catalog_io import split_entries
+from denali_spark.sources.manifests import read_manifest_list
 
 
 @pytest.fixture()
@@ -44,7 +45,7 @@ def _chunked_table(spark, io, ns="mor", name="t", n_chunks=4, rows=25):
 def _entries(io, ns, name):
     md = io.client.load_table(ns, name)["metadata"]
     snap = io._resolve_snapshot(md)
-    return io._manifest_entries(snap["manifest-list"])
+    return read_manifest_list(snap["manifest-list"])
 
 
 def test_position_delete_no_rewrite(spark, io):

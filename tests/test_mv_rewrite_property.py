@@ -36,14 +36,7 @@ from pyspark.sql import functions as F
 from denali_spark.catalog import CatalogServer, make_state
 from denali_spark.sources import SparkCatalogIO, delete_where
 from denali_spark.sources import expressions as E
-
-
-def _EX(default):
-    """Example budget: DENALI_FUZZ_SCALE multiplies every fuzzer's default
-    (deep one-off sessions set it to 5-10x; CI keeps 1x suite cost)."""
-    import os
-
-    return max(1, int(default * float(os.environ.get("DENALI_FUZZ_SCALE", "1"))))
+from tests.fuzz_budget import examples
 
 
 # Aggregates the fine MV maintains (same normalized expressions) and ones
@@ -193,7 +186,7 @@ def _run(io, sql, policy):
 
 
 @given(sql=rollup_query("rw.facts"))
-@settings(max_examples=_EX(12), deadline=None,
+@settings(max_examples=examples(12), deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_rewrite_never_changes_the_answer(wh, sql):
     dt, rows, info = _run(wh, sql, "fresh-only")
@@ -210,7 +203,7 @@ def _snap_count(io, ns, name):
 
 
 @given(sql=rollup_query("rw.sfacts", sum_bias=True))
-@settings(max_examples=_EX(8), deadline=None,
+@settings(max_examples=examples(8), deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_topup_on_stale_view_equals_live_base(wh, sql):
     # fresh-only must never serve a stale view — and still answer right.

@@ -17,6 +17,7 @@ from denali_spark.sources.partitioning import (
     transform_column,
 )
 from denali_spark.engine.tables import load_table
+from denali_spark.sources.manifests import read_manifest_list
 from tests.conftest import SF_SMOKE
 
 
@@ -68,7 +69,7 @@ def test_partitioned_write_manifest_and_readback(spark, io):
     )
     md = io.client.load_table(["pt"], "by_day")["metadata"]
     snap = io._resolve_snapshot(md)
-    entries = io._manifest_entries(snap["manifest-list"])
+    entries = read_manifest_list(snap["manifest-list"])
     n_days = events.select(F.to_date("ts")).distinct().count()
     assert len(entries) == n_days  # hash distribution → one file per day
     assert all("partition" in e and "ts_day" in e["partition"] for e in entries)
@@ -85,7 +86,7 @@ def test_partitioned_layout_makes_pruning_effective(spark, io):
     )
     md = io.client.load_table(["pt"], "pruned")["metadata"]
     snap = io._resolve_snapshot(md)
-    n_files = len(io._manifest_entries(snap["manifest-list"]))
+    n_files = len(read_manifest_list(snap["manifest-list"]))
     lo = events.agg(F.min(F.to_date("ts"))).collect()[0][0]
     where = E.and_(
         E.gt_eq("ts", f"{lo} 00:00:00"), E.lt("ts", f"{lo} 23:59:59.999")
@@ -110,7 +111,7 @@ def test_sorted_write_clusters_for_pruning(spark, io):
     assert md["default-sort-order-id"] == order["order-id"] == 1
     assert [f["direction"] for f in order["fields"]] == ["asc"]
     snap = io._resolve_snapshot(md)
-    entries = io._manifest_entries(snap["manifest-list"])
+    entries = read_manifest_list(snap["manifest-list"])
     assert len(entries) == 4
     # Range distribution → disjoint o_custkey ranges across files.
     ranges = sorted(
@@ -172,7 +173,7 @@ def test_partition_spec_evolution_end_to_end(spark, io):
     # the second commit's data files physically live under the partition dir
     head = md["refs"]["main"]["snapshot-id"]
     snap = next(s for s in md["snapshots"] if s["snapshot-id"] == head)
-    entries = io._manifest_entries(snap["manifest-list"])
+    entries = read_manifest_list(snap["manifest-list"])
     new_files = [e for e in entries if e.get("sequence-number") == 2]
     assert new_files and all("_p_lang=" in e["path"] for e in new_files)
     old_files = [e for e in entries if e.get("sequence-number") == 1]
@@ -197,7 +198,7 @@ def test_sort_order_evolution_applies_to_new_writes(spark, io):
     md = io.client.load_table(["so"], "t")["metadata"]
     head = md["refs"]["main"]["snapshot-id"]
     snap = next(s for s in md["snapshots"] if s["snapshot-id"] == head)
-    entries = io._manifest_entries(snap["manifest-list"])
+    entries = read_manifest_list(snap["manifest-list"])
     new = [e for e in entries if e.get("sequence-number") == 2]
     assert len(new) == 4
     windows = sorted(
@@ -344,7 +345,7 @@ def test_write_retry_relayouts_after_concurrent_spec_evolution(spark, io):
     md = io.client.load_table(["race"], "t")["metadata"]
     head = md["refs"]["main"]["snapshot-id"]
     snap = next(s for s in md["snapshots"] if s["snapshot-id"] == head)
-    entries = io._manifest_entries(snap["manifest-list"])
+    entries = read_manifest_list(snap["manifest-list"])
     new_files = [e for e in entries if e.get("sequence-number", 0) >= 2]
     assert new_files and all("_p_lang=" in e["path"] for e in new_files), (
         "retried write must land under the evolved layout"
@@ -384,7 +385,7 @@ def test_typed_r102_partition_struct_round_trip(spark, io):
     assert r102["fields"][0]["type"] == ["null", "long"]
 
     # decoded entries restore the internal string-valued tuple exactly
-    entries = io._manifest_entries(snap["manifest-list"])
+    entries = read_manifest_list(snap["manifest-list"])
     for e in entries:
         (k,) = e["partition"].keys()
         assert k == "k_bucket"
@@ -415,7 +416,7 @@ def test_typed_partition_falls_back_on_mixed_specs(spark, io):
     assert io.read_table(["pt"], "mixed").count() == 150
     md = io.client.load_table(["pt"], "mixed")["metadata"]
     snap = io._resolve_snapshot(md)
-    entries = io._manifest_entries(snap["manifest-list"])
+    entries = read_manifest_list(snap["manifest-list"])
     parts = {frozenset(e["partition"].keys()) for e in entries if e.get("partition")}
     assert frozenset({"k"}) in parts and frozenset({"j"}) in parts
 
@@ -440,7 +441,7 @@ def test_transform_aware_partition_pruning(spark, io):
     )
     md = io.client.load_table(["pr"], "b")["metadata"]
     snap = io._resolve_snapshot(md)
-    data, _ = split_entries(io._manifest_entries(snap["manifest-list"]))
+    data, _ = split_entries(read_manifest_list(snap["manifest-list"]))
     assert len({e["partition"]["id_bucket"] for e in data}) == 8
 
     kept = partition_prune(spark, md, E.eq("id", 37), data)
@@ -467,7 +468,7 @@ def test_transform_aware_partition_pruning(spark, io):
     )
     md2 = io.client.load_table(["pr"], "t2")["metadata"]
     snap2 = io._resolve_snapshot(md2)
-    data2, _ = split_entries(io._manifest_entries(snap2["manifest-list"]))
+    data2, _ = split_entries(read_manifest_list(snap2["manifest-list"]))
     kept2 = partition_prune(
         spark, md2, E.eq("ts", "2024-01-03 00:00:00"), data2
     )
@@ -483,7 +484,7 @@ def test_transform_aware_partition_pruning(spark, io):
     )
     md3 = io.client.load_table(["pr"], "neg")["metadata"]
     snap3 = io._resolve_snapshot(md3)
-    data3, _ = split_entries(io._manifest_entries(snap3["manifest-list"]))
+    data3, _ = split_entries(read_manifest_list(snap3["manifest-list"]))
     kept4 = partition_prune(spark, md3, E.not_eq("p", 1), data3)
     assert {e["partition"]["p"] for e in kept4} == {"0", "2"}
     # but a negation on a BUCKET transform never prunes (collisions)
@@ -575,7 +576,7 @@ def test_partition_prune_conservative_across_spec_evolution(spark, io):
     )
     md = io.client.load_table(["pe"], "t")["metadata"]
     snap = io._resolve_snapshot(md)
-    data, _ = split_entries(io._manifest_entries(snap["manifest-list"]))
+    data, _ = split_entries(read_manifest_list(snap["manifest-list"]))
     old_layout = [e for e in data if "k" in (e.get("partition") or {})]
     assert old_layout, "fixture must keep old-layout files live"
 
@@ -617,7 +618,7 @@ def test_partition_prune_survives_transform_width_evolution(spark, io):
     )
     md = io.client.load_table(["pw"], "t")["metadata"]
     snap = io._resolve_snapshot(md)
-    data, _ = split_entries(io._manifest_entries(snap["manifest-list"]))
+    data, _ = split_entries(read_manifest_list(snap["manifest-list"]))
     b8 = spark.sql("SELECT pmod(hash(CAST(37 AS BIGINT)), 8)").first()[0]
     b16 = spark.sql("SELECT pmod(hash(CAST(37 AS BIGINT)), 16)").first()[0]
     assert b8 != b16  # the scenario the advice reproduced (5 vs 13)
@@ -643,17 +644,16 @@ def test_partition_prune_survives_transform_width_evolution(spark, io):
     )
     md1 = io.client.load_table(["pw"], "single")["metadata"]
     snap1 = io._resolve_snapshot(md1)
-    d1, _ = split_entries(io._manifest_entries(snap1["manifest-list"]))
+    d1, _ = split_entries(read_manifest_list(snap1["manifest-list"]))
     kept1 = partition_prune(spark, md1, E.eq("id", 37), d1)
     assert kept1 and {e["partition"]["id_bucket"] for e in kept1} == {str(b8)}
 
 
 def test_partition_prune_exact_per_entry_spec_id(spark, io):
     """r11 sharpening of the width-evolution fix: manifests are written
-    split per spec-id with the encoding spec in the header (flagged
-    spec-id-exact), the reader reattaches it per entry, and pruning
-    checks each entry against EXACTLY its own spec — the conservative
-    keep-if-any-layout-matches tax disappears for labeled entries."""
+    split per spec-id with the encoding spec in the header, the reader
+    reattaches it per entry, and pruning checks each entry against
+    EXACTLY its own spec — no keep-if-any-layout-matches tax."""
     from denali_spark.sources.catalog_io import split_entries
     from denali_spark.sources.partitioning import partition_prune
 
@@ -667,7 +667,7 @@ def test_partition_prune_exact_per_entry_spec_id(spark, io):
     )
     md = io.client.load_table(["px"], "t")["metadata"]
     snap = io._resolve_snapshot(md)
-    data, _ = split_entries(io._manifest_entries(snap["manifest-list"]))
+    data, _ = split_entries(read_manifest_list(snap["manifest-list"]))
     # every live entry is labeled with its true encoding spec
     sids = {e.get("spec-id") for e in data}
     assert sids == {0, 1}, sids

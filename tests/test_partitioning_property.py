@@ -26,14 +26,7 @@ from pyspark.sql import functions as F
 from denali_spark.catalog import CatalogServer, make_state
 from denali_spark.sources import SparkCatalogIO
 from denali_spark.sources import expressions as E
-
-
-def _EX(default):
-    """Example budget: DENALI_FUZZ_SCALE multiplies every fuzzer's default
-    (deep one-off sessions set it to 5-10x; CI keeps 1x suite cost)."""
-    import os
-
-    return max(1, int(default * float(os.environ.get("DENALI_FUZZ_SCALE", "1"))))
+from tests.fuzz_budget import examples
 
 
 _SEQ = itertools.count()
@@ -84,7 +77,7 @@ _pred = st.one_of(
        widths=st.tuples(st.integers(min_value=5, max_value=60),
                         st.integers(min_value=5, max_value=60)),
        preds=st.lists(_pred, min_size=1, max_size=3))
-@settings(max_examples=_EX(6), deadline=None,
+@settings(max_examples=examples(6), deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_pruned_read_equals_filtered_full_scan(spark, io, spec_i, evolve_i,
                                                widths, preds):

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from denali_spark.catalog import CatalogServer, make_state
 from denali_spark.sources import SparkCatalogIO
 from denali_spark.sources.catalog_io import split_entries
+from denali_spark.sources.manifests import read_manifest_list
 from denali_spark.sources.schema_convert import iceberg_schema_to_spark
 from denali_spark.sources.schema_evolution import add_column, current_schema
 
@@ -67,7 +68,7 @@ def many_files(spark, io):
         rows(130, 230).withColumn("tag", F.lit("new")), ns, name, num_files=10
     )
     md = io.client.load_table(ns, name)["metadata"]
-    data, _ = split_entries(io._manifest_entries(io._resolve_snapshot(md)["manifest-list"]))
+    data, _ = split_entries(read_manifest_list(io._resolve_snapshot(md)["manifest-list"]))
     assert len(data) == 21
     assert {e.get("schema-id") for e in data} == {0, 1}
     assert sum(bool(e.get("materialized-lineage")) for e in data) == 1
@@ -127,6 +128,15 @@ def test_write_aligns_nested_types_to_the_table(spark, io):
     assert sorted(r.c for r in io.read_table(ns, "t").collect()) == [[1, 2], [3]]
     with pytest.raises(ValueError, match="cannot implicitly cast"):
         io.write_table(spark.createDataFrame([(["x"],)], "c array<string>"), ns, "t")
+    # a bare NULL is typed void and casts losslessly into any column type
+    for fmt in ("parquet", "orc", "avro"):
+        io.write_table(
+            spark.createDataFrame([(1, "x")], "a int, b string"), ns, f"void_{fmt}",
+            mode="overwrite", file_format=fmt,
+        )
+        io.write_table(spark.sql("select 2 as a, null as b"), ns, f"void_{fmt}")
+        got = sorted(tuple(r) for r in io.read_table(ns, f"void_{fmt}").collect())
+        assert got == [(1, "x"), (2, None)], fmt
 
 
 _UTC = datetime.timezone.utc

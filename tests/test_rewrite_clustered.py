@@ -17,6 +17,7 @@ from denali_spark.sources import (
 from denali_spark.sources import expressions as E
 from denali_spark.sources.catalog_io import split_entries
 from denali_spark.sources.expressions import file_might_match
+from denali_spark.sources.manifests import read_manifest_list
 
 
 @pytest.fixture()
@@ -45,7 +46,7 @@ def _grid_table(spark, io, ns="rw", name="grid", n=4096, chunks=8):
 def _data_entries(io, ns, name):
     md = io.client.load_table(ns, name)["metadata"]
     snap = io._resolve_snapshot(md)
-    return split_entries(io._manifest_entries(snap["manifest-list"]))
+    return split_entries(read_manifest_list(snap["manifest-list"]))
 
 
 def _match_fraction(entries, expr):
@@ -153,7 +154,7 @@ def test_zorder_rewrite_folds_deletion_vectors(spark, io):
                       target_file_size_bytes=4096)
     md = io.client.load_table(ns, "t")["metadata"]
     snap = io._resolve_snapshot(md)
-    _data, deletes = split_entries(io._manifest_entries(snap["manifest-list"]))
+    _data, deletes = split_entries(read_manifest_list(snap["manifest-list"]))
     assert deletes == []
     got = sorted(r["id"] for r in io.read_table(ns, "t").collect())
     assert got == list(range(30, 300))

@@ -12,6 +12,7 @@ from denali_spark.catalog import CatalogServer, make_state
 from denali_spark.sources import SparkCatalogIO, delete_where_dv
 from denali_spark.sources import expressions as E
 from denali_spark.sources.catalog_io import split_entries
+from denali_spark.sources.manifests import read_manifest_list
 
 
 @pytest.fixture()
@@ -24,7 +25,7 @@ def io(spark, tmp_path):
 def _entries(io, ns, name):
     md = io.client.load_table(ns, name)["metadata"]
     snap = io._resolve_snapshot(md)
-    return split_entries(io._manifest_entries(snap["manifest-list"]))[0]
+    return split_entries(read_manifest_list(snap["manifest-list"]))[0]
 
 
 def test_appends_assign_disjoint_ranges_and_advance_next_row_id(spark, io):
@@ -118,7 +119,7 @@ def test_row_ids_carried_through_compaction(spark, io):
     assert not out.get("noop")
     md = io.client.load_table(ns, "c")["metadata"]
     snap = io._resolve_snapshot(md)
-    data, deletes = split_entries(io._manifest_entries(snap["manifest-list"]))
+    data, deletes = split_entries(read_manifest_list(snap["manifest-list"]))
     assert any(e.get("materialized-lineage") for e in data)
     after = {
         r["id"]: r["_row_id"]

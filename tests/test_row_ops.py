@@ -21,6 +21,7 @@ from denali_spark.sources import (
     update_where,
 )
 from denali_spark.sources import expressions as E
+from denali_spark.sources.manifests import read_manifest_list
 
 
 @pytest.fixture()
@@ -46,7 +47,7 @@ def _chunked_table(spark, io, n_chunks=4, rows_per_chunk=25):
 def _live_paths(io, ns, name):
     md = io.client.load_table(ns, name)["metadata"]
     snap = io._resolve_snapshot(md)
-    return {e["path"] for e in io._manifest_entries(snap["manifest-list"])}
+    return {e["path"] for e in read_manifest_list(snap["manifest-list"])}
 
 
 # --- expression unit behavior ----------------------------------------------
@@ -81,7 +82,7 @@ def test_manifest_stats_written(spark, io):
     ns, name = _chunked_table(spark, io)
     md = io.client.load_table(ns, name)["metadata"]
     snap = io._resolve_snapshot(md)
-    entries = io._manifest_entries(snap["manifest-list"])
+    entries = read_manifest_list(snap["manifest-list"])
     assert len(entries) == 4
     for e in entries:
         st = e["stats"]["id"]
@@ -241,7 +242,7 @@ def test_compact_bin_packs_small_files(spark, io):
     assert resp.get("noop") is not True
     md = io.client.load_table(ns, name)["metadata"]
     snap = io._resolve_snapshot(md)
-    entries = io._manifest_entries(snap["manifest-list"])
+    entries = read_manifest_list(snap["manifest-list"])
     assert len(entries) == 1  # 4 small files → 1 packed file
     assert io.read_table(ns, name).count() == 100
     # Stats survive compaction for future pruning.
@@ -252,7 +253,7 @@ def test_compact_leaves_large_files_alone(spark, io):
     ns, name = _chunked_table(spark, io)
     sizes = [
         e["file-size-bytes"]
-        for e in io._manifest_entries(
+        for e in read_manifest_list(
             io._resolve_snapshot(io.client.load_table(ns, name)["metadata"])[
                 "manifest-list"
             ]
@@ -285,7 +286,7 @@ def test_rewrites_preserve_partition_spec(spark, io):
     def partitions(tag):
         md = io.client.load_table(["pp"], "t")["metadata"]
         snap = io._resolve_snapshot(md)
-        data, _ = split_entries(io._manifest_entries(snap["manifest-list"]))
+        data, _ = split_entries(read_manifest_list(snap["manifest-list"]))
         assert all(e.get("partition") is not None for e in data), (
             f"{tag}: rewritten file lost its partition tuple"
         )
@@ -338,7 +339,7 @@ def test_compact_where_scopes_the_rewrite(spark, io):
     def entries():
         md = io.client.load_table(["cw"], "t")["metadata"]
         snap = io._resolve_snapshot(md)
-        data, _ = split_entries(io._manifest_entries(snap["manifest-list"]))
+        data, _ = split_entries(read_manifest_list(snap["manifest-list"]))
         return data
 
     before = {e["path"]: e["partition"]["p"] for e in entries()}

@@ -26,14 +26,7 @@ from pyspark.sql import functions as F
 
 from denali_spark.catalog import CatalogServer, make_state
 from denali_spark.sources import SparkCatalogIO, equality_delete
-
-
-def _EX(default):
-    """Example budget: DENALI_FUZZ_SCALE multiplies every fuzzer's default
-    (deep one-off sessions set it to 5-10x; CI keeps 1x suite cost)."""
-    import os
-
-    return max(1, int(default * float(os.environ.get("DENALI_FUZZ_SCALE", "1"))))
+from tests.fuzz_budget import examples
 
 
 _SEQ = itertools.count()
@@ -127,7 +120,7 @@ def _apply(spark, io, t, state, next_id, op):
 
 @given(ops=_ops, mor=st.booleans(),
        seed_width=st.integers(min_value=1, max_value=40))
-@settings(max_examples=_EX(5), deadline=None,
+@settings(max_examples=examples(5), deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_dml_state_equals_model(spark, io, ops, mor, seed_width):
     i = next(_SEQ)

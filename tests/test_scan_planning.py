@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from denali_spark.catalog import CatalogServer, make_state
 from denali_spark.sources import SparkCatalogIO
+from denali_spark.sources.manifests import read_manifest_list
 
 
 @pytest.fixture(scope="module")
@@ -41,7 +42,7 @@ def test_plan_matches_engine_and_prunes(spark, io):
     snap = io._resolve_snapshot(md)
     local = {
         e["path"]
-        for e in io._manifest_entries(snap["manifest-list"])
+        for e in read_manifest_list(snap["manifest-list"])
         if e.get("content", "data") == "data"
     }
     assert paths == local and len(paths) == 2
@@ -156,7 +157,7 @@ def test_plan_tasks_pagination(spark, io, monkeypatch):
     snap = io._resolve_snapshot(md)
     local = {
         e["path"]
-        for e in io._manifest_entries(snap["manifest-list"])
+        for e in read_manifest_list(snap["manifest-list"])
         if e.get("content", "data") == "data"
     }
     assert set(paths) == local

@@ -14,6 +14,7 @@ from denali_spark.sources.schema_evolution import (
     drop_column,
     rename_column,
 )
+from denali_spark.sources.manifests import read_manifest_list
 
 
 @pytest.fixture()
@@ -48,7 +49,7 @@ def test_rename_column_is_metadata_only(spark, io):
     ns, name = _seed(spark, io)
     before = {
         e["path"]
-        for e in io._manifest_entries(
+        for e in read_manifest_list(
             io._resolve_snapshot(io.client.load_table(ns, name)["metadata"])[
                 "manifest-list"
             ]
@@ -58,7 +59,7 @@ def test_rename_column_is_metadata_only(spark, io):
     md = io.client.load_table(ns, name)["metadata"]
     after = {
         e["path"]
-        for e in io._manifest_entries(io._resolve_snapshot(md)["manifest-list"])
+        for e in read_manifest_list(io._resolve_snapshot(md)["manifest-list"])
     }
     assert before == after  # zero files rewritten
     got = io.read_table(ns, name)

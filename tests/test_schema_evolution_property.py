@@ -22,14 +22,7 @@ from hypothesis import strategies as st
 
 from denali_spark.catalog import CatalogServer, make_state
 from denali_spark.sources import SparkCatalogIO
-
-
-def _EX(default):
-    """Example budget: DENALI_FUZZ_SCALE multiplies every fuzzer's default
-    (deep one-off sessions set it to 5-10x; CI keeps 1x suite cost)."""
-    import os
-
-    return max(1, int(default * float(os.environ.get("DENALI_FUZZ_SCALE", "1"))))
+from tests.fuzz_budget import examples
 
 
 _SEQ = itertools.count()
@@ -114,7 +107,7 @@ def _apply(spark, io, t, live, rows, next_id, op, value_of):
 
 @given(ops=st.lists(_op, min_size=1, max_size=6),
        seed_cols=st.integers(min_value=1, max_value=3))
-@settings(max_examples=_EX(5), deadline=None,
+@settings(max_examples=examples(5), deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_evolved_reads_match_row_model(spark, io, ops, seed_cols):
     i = next(_SEQ)

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from denali_spark.catalog import CatalogServer, make_state
 from denali_spark.sources import SparkCatalogIO, delete_where_dv
 from denali_spark.sources import expressions as E
+from denali_spark.sources.manifests import read_manifest_list
 
 
 @pytest.fixture(scope="module")
@@ -333,7 +334,7 @@ def test_sql_dml_merge_on_read_via_table_property(spark, io):
     # deletion vectors, not rewrites: data entries untouched, DV present
     md2 = io.client.load_table(["dmlm"], "t")["metadata"]
     snap = io._resolve_snapshot(md2)
-    entries = io._manifest_entries(snap["manifest-list"])
+    entries = read_manifest_list(snap["manifest-list"])
     assert any(
         e.get("content") == "position-deletes"
         and e.get("file-format") == "puffin"
@@ -685,7 +686,7 @@ def test_sql_alter_table_partition_field_changes_layout(spark, io):
     md = io.client.load_table(["ddlp"], "t")["metadata"]
     assert md["default-spec-id"] > 0
     snap = io._resolve_snapshot(md)
-    entries = io._manifest_entries(snap["manifest-list"])
+    entries = read_manifest_list(snap["manifest-list"])
     parted = [e for e in entries if e.get("partition")]
     unparted = [e for e in entries if not e.get("partition")]
     assert parted and unparted  # both layouts coexist post-evolution

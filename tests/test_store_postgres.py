@@ -28,6 +28,7 @@ import pytest
 
 from denali_spark.catalog.errors import AlreadyExists, NamespaceNotEmpty, NoSuchNamespace
 from denali_spark.catalog.store import PostgresStore, Store, make_store
+from denali_spark.sources.manifests import read_manifest_list
 
 INITDB = shutil.which("initdb")
 PG_CTL = shutil.which("pg_ctl")
@@ -364,7 +365,7 @@ def test_row_lineage_cas_race_disjoint_ranges_over_postgres(
         md = io1.client.load_table(["rlpg"], "t")["metadata"]
         assert md["next-row-id"] == 100
         snap = io1._resolve_snapshot(md)
-        data, _ = split_entries(io1._manifest_entries(snap["manifest-list"]))
+        data, _ = split_entries(read_manifest_list(snap["manifest-list"]))
         ranges = sorted(
             (e["first-row-id"], e["first-row-id"] + e["record-count"])
             for e in data

@@ -18,6 +18,7 @@ from denali_spark.streaming import (
     user_running_totals,
     windowed_counts,
 )
+from denali_spark.sources.manifests import read_manifest_list
 from tests.conftest import SF_SMOKE
 
 
@@ -205,7 +206,7 @@ def test_stream_cdc_apply_equality_deletes(spark, tmp_path):
         # merge-on-read property: batch 1's data file was never rewritten
         md = io.client.load_table(["cdc"], "t")["metadata"]
         snap = io._resolve_snapshot(md)
-        data, deletes = split_entries(io._manifest_entries(snap["manifest-list"]))
+        data, deletes = split_entries(read_manifest_list(snap["manifest-list"]))
         assert [e["content"] for e in deletes] == ["equality-deletes"]
         assert len(data) == 2  # one append per batch, both carried by reference
     finally:
